@@ -724,7 +724,6 @@ def main() -> None:
         out["ingest_spread_pct"] = ingest["spread_pct"]
         out["ingest_raw_spread_pct"] = ingest["raw_spread_pct"]
         out["ingest_discarded_trials"] = ingest["discarded_trials"]
-        out["ingest_drain"] = ingest.get("drain", "legacy")
         if ingest["spread_pct"] > 25 or ingest["window_exhausted"]:
             out["ingest_noisy"] = True
         if ingest["window_exhausted"]:
@@ -824,32 +823,6 @@ def engine_bench(spark, sf_dir: str) -> None:
             print(f"# engine {name}[{eng}]: {best:.3f}s (min of 3)", file=sys.stderr)
 
 
-def batch_drain_bytes(b, drain_mode: str) -> int:
-    """Consume one ingest micro-batch, returning its payload byte count.
-
-    ``observe`` (default since r16, verdict item 7): a noop-sink write
-    with the byte count read from an Observation riding the SAME job —
-    no separate per-batch driver ``collect()``, and the noop sink
-    consumes FULL rows (guide §1.4). ``legacy``: the r1-r15
-    agg+collect drain, kept for methodology comparability. Both must
-    count identical bytes (pinned by tests/test_ingest_drain.py).
-    """
-    from pyspark.sql import functions as F
-
-    if drain_mode == "observe":
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        (
-            b.observe(obs, F.sum(F.length("value")).alias("nb"))
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-        return obs.get["nb"] or 0
-    return b.agg(F.sum(F.length("value"))).collect()[0][0] or 0
-
-
 def ingest_bench(spark) -> dict | None:
     """Streaming-agent ingest throughput, methodology-matched to the
     reference's only published number (BASELINE.md: 278.47 MB/s,
@@ -920,6 +893,7 @@ def ingest_bench(spark) -> dict | None:
 
     from callysto_spark.app import App
     from callysto_spark.sources import SourceSpec
+    from perfbench.payload import batch_bytes
 
     # 100k ≈ 7 GB: long enough (~10s+) that startup jitter stops moving
     # the MB/s figure, closer to the reference's 200k-message
@@ -963,15 +937,6 @@ def ingest_bench(spark) -> dict | None:
         # code — measured 220 vs 580+ MB/s on the first timed drain.
         spark.read.parquet(f"{base}/stage").agg(F.sum(F.length("value"))).collect()
         n_threads = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        # r16 (verdict item 7): the default drain is now a noop-sink
-        # write with the byte count read from an Observation riding the
-        # SAME job — no separate per-batch driver collect(), and the
-        # noop sink consumes FULL rows (guide §1.4) where the old agg
-        # let Catalyst prune everything but `value`. The legacy
-        # agg+collect drain stays selectable for methodology
-        # comparability with r1-r15 (SPARK_GRAFT_INGEST_DRAIN=legacy;
-        # one window under each drain recorded in OPTIMIZATION_r16.md).
-        drain_mode = os.environ.get("SPARK_GRAFT_INGEST_DRAIN", "observe")
         # contended-trial discipline (r11): normalization cannot rescue
         # a trial that a neighbor's burst hit — run 3 measured a trial
         # at 47.3 MB/s bracketed by mt samples of 0.776s vs the 0.085s
@@ -1017,7 +982,10 @@ def ingest_bench(spark) -> dict | None:
                 t_in = time.perf_counter()
                 if stats["t0"] is None:
                     stats["t0"] = t_in
-                nbytes = batch_drain_bytes(b, drain_mode)
+                # noop-sink drain, bytes from an Observation on the same
+                # job; the payload is ASCII hex, so its octet count equals
+                # the character count the r1-r16 anchors recorded
+                nbytes = batch_bytes(b)
                 stats["bytes"] += nbytes
                 stats["t1"] = time.perf_counter()
                 # per-batch rate: a burst that hits ONE of the 4 batches
@@ -1167,7 +1135,6 @@ def ingest_bench(spark) -> dict | None:
             ],
             "window_exhausted": window_exhausted,
             "short_sample": short_sample,
-            "drain": drain_mode,
         }
     except Exception as exc:  # never fail the bench line on the extra metric
         print(f"# ingest bench failed: {exc}", file=sys.stderr)

@@ -9,7 +9,10 @@ aggregation buffer or bucket join can be asked to hold. Reference has no
 dedup surface — its users would hand-roll this in an agent closure
 (reference `callysto/src/types/agent.rs:120-143`); here it is
 first-class, benchmarked, and skew-probed (SCALING.md "Stop-shingle
-probes").
+probes"). Each operator has ONE implementation: a vectorized Arrow
+shingle kernel was measured 1.4-2.5x slower than the JVM form on
+documents of 300 to 30,000 characters and removed (OPTIMIZATION_r16.md
+and CHANGES.md hold the A/Bs).
 
 Input contract: ``id_col`` is UNIQUE per row. Exact dedup is the
 operator that ESTABLISHES that invariant for a raw corpus (its survivor
@@ -24,7 +27,6 @@ the r15 duplicate-row sweep — see tests/test_dup_fuzz.py).
 
 from __future__ import annotations
 
-import os
 import random
 from collections.abc import Sequence
 
@@ -46,22 +48,6 @@ _MERSENNE_P = (1 << 31) - 1
 # ``CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)``; 15 chars, not 16,
 # so the value always fits signed int64). Both run fully JVM-side.
 HASH_ENGINES = ("xxhash64", "md5_60")
-
-# Which implementation backs ``shingle_arrays`` (and through it every
-# Jaccard/MinHash/LSH consumer): "jvm" = the higher-order-function
-# expression pipeline (DEFAULT), "arrow" = the vectorized mapInArrow
-# kernel (guide §4.2; see ``_arrow_shingle_batches``). Output contract
-# is identical either way (pinned by the JVM-vs-Arrow parity fuzz in
-# tests/test_dedup_pipeline.py). The r16 interleaved same-session A/B
-# (OPTIMIZATION_r16.md) measured the Arrow kernel SLOWER on the
-# isolated narrow stage at BOTH test scales — sf0.1: jvm 0.531s vs
-# arrow 0.688s min; sf1: 1.08 vs 1.61 — the JVM↔Python boundary and
-# Python-side dedup cost more than the interpreted-HOF eval they
-# replace (guide §1.1's "fresh implementation of the ideal plan is
-# usually slower" case), so the JVM form stays the default and the
-# kernel remains as the measured alternative.
-SHINGLE_IMPL = os.environ.get("SPARK_GRAFT_SHINGLE_IMPL", "jvm")
-
 
 def string_hash(col: Column, engine: str = "xxhash64") -> Column:
     """Deterministic int64 hash of a string column, per ``engine``.
@@ -143,145 +129,6 @@ def word_shingles(toks: Column, n: int) -> Column:
     )
 
 
-def _arrow_shingle_batches(n: int, ws_pattern: str):
-    """Build the ``mapInArrow`` generator for the Arrow shingle kernel
-    (see ``shingle_arrays`` for the contract and the measured A/B).
-
-    Per batch, entirely vectorized (guide §4.2 — no per-row Python):
-
-    1. casefold + trim + regex split via ``pyarrow.compute`` (utf8proc
-       lower; the ς→σ fold and U+0307 strip make it agree with Java
-       ``toLowerCase`` at the two SpecialCasing points — the same
-       argument as the DuckDB oracle side, and pinned by the JVM-vs-
-       Arrow parity fuzz in tests/test_dedup_pipeline.py plus
-       tests/test_text_fuzz.py's pathological sweep).
-    2. The normalized document (tokens joined by ' ') is ONE contiguous
-       Arrow data buffer; every n-gram shingle is a byte-slice of it,
-       so shingle construction is offsets arithmetic (numpy) + one
-       vectorized byte gather — no per-row string building (the Arrow
-       property the guide calls out for re-slicing binary columns).
-    3. per-doc distinct + list assembly via Acero hash aggregation
-       (``use_threads=False``: Spark already runs one task per core;
-       internal Arrow threads would oversubscribe).
-
-    Truncated-shingle and empty-text semantics are bit-identical to
-    ``word_shingles``: docs with L < n tokens yield the single shingle
-    joining all L tokens; blank text yields one '' shingle.
-    """
-
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        out_type = pa.list_(pa.string())
-
-        def run(b: "pa.RecordBatch"):
-            doc = b.column(0)
-            text = b.column(1)
-            if text.null_count:  # stage_text already dropped these
-                keep = pc.is_valid(text)
-                doc, text = doc.filter(keep), text.filter(keep)
-            if len(text) == 0:
-                yield pa.RecordBatch.from_arrays(
-                    [doc, pa.array([], type=out_type)], ["doc", "gs"]
-                )
-                return
-            folded = pc.replace_substring(
-                pc.replace_substring(pc.utf8_lower(text), "ς", "σ"),
-                "̇",
-                "",
-            )
-            toks = pc.split_pattern_regex(pc.utf8_trim(folded, " "), ws_pattern)
-            if isinstance(toks, pa.ChunkedArray):
-                toks = toks.combine_chunks()
-            tok_off = toks.offsets.to_numpy().astype(np.int64)
-            tok_len = pc.binary_length(toks.values).to_numpy().astype(np.int64)
-            norm = pc.binary_join(toks, " ")
-            if isinstance(norm, pa.ChunkedArray):
-                norm = norm.combine_chunks()
-            nbufs = norm.buffers()
-            norm_off = np.frombuffer(nbufs[1], dtype=np.int32)[
-                norm.offset : norm.offset + len(norm) + 1
-            ].astype(np.int64)
-            norm_buf = np.frombuffer(nbufs[2], dtype=np.uint8)
-            ndocs = len(toks)
-            L = np.diff(tok_off)  # tokens per doc (>= 1: split never yields [])
-            m = np.maximum(L - (n - 1), 1)  # shingles per doc, pre-distinct
-            # byte position of global token t inside its doc's normalized
-            # text: csum[t] - csum[first token of doc]
-            csum = np.concatenate(([0], np.cumsum(tok_len + 1)))
-            doc_of_sh = np.repeat(np.arange(ndocs), m)
-            tot = int(m.sum())
-            sh_local = np.arange(tot) - np.repeat(
-                np.concatenate(([0], np.cumsum(m)[:-1])), m
-            )
-            t_start = tok_off[doc_of_sh] + sh_local
-            t_end = np.minimum(t_start + n - 1, tok_off[doc_of_sh + 1] - 1)
-            base = norm_off[doc_of_sh] - csum[tok_off[doc_of_sh]]
-            b_start = base + csum[t_start]
-            b_end = base + csum[t_end] + tok_len[t_end]
-            lens = b_end - b_start
-            out_off = np.concatenate(([0], np.cumsum(lens)))
-            idx = np.repeat(b_start - out_off[:-1], lens) + np.arange(out_off[-1])
-            g_all = pa.StringArray.from_buffers(
-                tot,
-                pa.py_buffer(out_off.astype(np.int32)),
-                pa.py_buffer(norm_buf[idx]),
-            )
-            rows = pa.table({"doc": pc.take(doc, pa.array(doc_of_sh)), "g": g_all})
-            distinct = pa.TableGroupBy(rows, ["doc", "g"], use_threads=False).aggregate([])
-            arrs = pa.TableGroupBy(distinct, ["doc"], use_threads=False).aggregate(
-                [("g", "list")]
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    arrs.column("doc").combine_chunks(),
-                    arrs.column("g_list").combine_chunks().cast(out_type),
-                ],
-                ["doc", "gs"],
-            )
-
-        for raw in batches:
-            # int32 string offsets cap an Arrow batch's payload at 2 GiB;
-            # shingle bytes are <= n x the normalized text, so slicing the
-            # input at ~64 MiB of text keeps the output far under it.
-            tbytes = pc.binary_length(raw.column(1)).to_numpy(zero_copy_only=False)
-            cum = np.cumsum(np.nan_to_num(tbytes, nan=0.0))
-            total = float(cum[-1]) if len(cum) else 0.0
-            if total > 64 * 1024 * 1024:
-                splits = np.searchsorted(
-                    cum, np.arange(64 * 1024 * 1024, cum[-1], 64 * 1024 * 1024)
-                )
-                lo = 0
-                for hi in list(splits + 1) + [raw.num_rows]:
-                    if hi > lo:
-                        yield from run(raw.slice(lo, hi - lo))
-                    lo = hi
-            else:
-                yield from run(raw)
-
-    return gen
-
-
-def shingle_arrays_arrow(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """Arrow-kernel implementation of ``shingle_arrays`` (guide §4.2):
-    the tokenize → shingle → distinct pipeline runs as ONE vectorized
-    ``mapInArrow`` over (id, text) batches instead of interpreted
-    CodegenFallback higher-order expressions. Same output contract.
-    Narrow (no shuffle) and streaming-legal like the JVM form."""
-    from callysto_spark.functions.compat import WS_CLASS
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    narrowed = stage_text(df, text_col).select(
-        F.col(id_col).alias("doc"), F.col(text_col).alias("__text")
-    )
-    return narrowed.mapInArrow(
-        _arrow_shingle_batches(n, WS_CLASS + "+"),
-        f"doc {id_type}, gs array<string>",
-    )
-
-
 def with_shingles(df: DataFrame, text_col: str, n: int, out: str = "gs") -> DataFrame:
     """df + distinct word-n-gram shingle array column (tokens
     materialized through a Generate barrier — see ``shingle_arrays``;
@@ -335,8 +182,6 @@ def shingle_arrays(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFra
     (it materializes the full shingle array at the new operator
     boundary). Left in the measured-fastest original form.
     """
-    if SHINGLE_IMPL == "arrow":
-        return shingle_arrays_arrow(df, id_col, text_col, n)
     return staged_tokens(df, id_col, text_col).select(
         "doc", word_shingles(F.col("__toks"), n).alias("gs")
     )
@@ -358,20 +203,8 @@ def ngram_jaccard_pairs(
     n: int = 4,
     threshold: float = 0.4,
     max_doc_freq: int | None = None,
-    shingle_reuse: str = "persist",
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity pairs above ``threshold``.
-
-    ``shingle_reuse`` governs how the capped path feeds its two
-    consumers (the df-count pass and the semi-join probe) from one
-    shingle table: ``'persist'`` (default) caches it
-    (MEMORY_AND_DISK — right when the exploded shingle table, ~3-5x
-    the text, fits the cluster's storage memory+disk);
-    ``'recompute'`` re-derives it from the source both times — the
-    narrow tokenize/shingle pipeline runs twice, measured within 10%
-    of the persist path at the 30x/100x corpora (r8 A/B), and the
-    right choice when caching a corpus-sized intermediate is
-    infeasible or evicts hotter data at 100 TB.
 
     Two physical strategies behind one result contract:
 
@@ -396,18 +229,15 @@ def ngram_jaccard_pairs(
     Output: (doc_a, doc_b, inter, union_sz, jaccard) with doc_a < doc_b.
     jaccard is an int/int division — bit-deterministic, no rounding.
     """
-    # Validate at entry, not inside the max_doc_freq branch (r8 ADVICE):
-    # on the uncapped path the knob is unused, but a typo'd value must
-    # still fail loudly rather than be silently accepted and ignored.
-    if shingle_reuse not in ("persist", "recompute"):
-        raise ValueError(
-            f"shingle_reuse must be 'persist' or 'recompute', got {shingle_reuse!r}"
-        )
     # In-row shingle arrays (see shingle_arrays): set size is just
     # size(gs) — no window, no distinct exchange; the explode to
-    # (doc, n_sh, g) rows is narrow.
+    # (doc, n_sh, g) rows is narrow. Both strategies read the shingle
+    # table twice (df pass + semi-join probe, or both self-join sides),
+    # so it is persisted.
     arr = shingle_arrays(df, id_col, text_col, n)
-    sh = arr.select("doc", F.size("gs").alias("n_sh"), F.explode("gs").alias("g"))
+    sh = transient_persist(
+        arr.select("doc", F.size("gs").alias("n_sh"), F.explode("gs").alias("g"))
+    )
     if max_doc_freq is not None:
         # Two-pass document-frequency cap (round-7 verdict finding #1).
         # The previous one-pass — groupBy(g).collect_list(...).filter(
@@ -447,8 +277,6 @@ def ngram_jaccard_pairs(
         # probe partition's read; AQE skew-join (on — session.py) splits
         # that probe partition across tasks with the build side
         # replicated, so even the transit is parallel, not a straggler.
-        if shingle_reuse == "persist":
-            sh = transient_persist(sh)
         live = (
             sh.groupBy("g")
             .agg(F.count(F.lit(1)).alias("df"))
@@ -484,7 +312,6 @@ def ngram_jaccard_pairs(
             .agg(F.count("*").alias("inter"))
         )
     else:
-        sh = transient_persist(sh)
         a = sh.alias("a")
         b = sh.alias("b")
         pairs = (

@@ -722,16 +722,16 @@ def emb_label_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("cosine_sim", rnd("cosine_sim", 6))
 
 
-_CENTROID_CACHE: dict[tuple[str, int], list[tuple[int, list[float]]]] = {}
-
-
 def _centroids(spark: SparkSession, sf_dir: str, k: int = 8) -> list[tuple[int, list[float]]]:
     """Deterministic coarse centroids: the first k vectors (pluggable —
-    see operators/similarity.py ivf_assign). Cached per (sf_dir, k):
-    centroids are index metadata, fetched once, not once per query."""
-    key = (sf_dir, k)
-    if key in _CENTROID_CACHE:
-        return _CENTROID_CACHE[key]
+    see operators/similarity.py ivf_assign). Cached per (sf_dir, k) in
+    the session's table cache (see tables.load): centroids are index
+    metadata, fetched once per session, not once per query, and a new
+    session re-reads them from the current corpus."""
+    cache: dict = spark.__dict__.setdefault("_callysto_table_cache", {})
+    key = ("__centroids__", sf_dir, k)
+    if key in cache:
+        return cache[key]
     rows = (
         # first k CLEAN vectors (clean_vec contract): a NaN/short/NULL
         # centroid would make every distance against it undefined
@@ -743,7 +743,7 @@ def _centroids(spark: SparkSession, sf_dir: str, k: int = 8) -> list[tuple[int, 
         .collect()
     )
     out = [(r["vec_id"], list(r["embedding"])) for r in sorted(rows, key=lambda r: r["vec_id"])]
-    _CENTROID_CACHE[key] = out
+    cache[key] = out
     return out
 
 

@@ -263,22 +263,6 @@ def test_simhash_bucket_cap_drops_template_cluster(spark):
     assert not any(a < 100 and b < 100 for a, b in capped), f"cluster pairs leaked: {capped}"
 
 
-def test_capped_jaccard_recompute_mode_matches_persist(spark, sf_dir):
-    """shingle_reuse='recompute' (for corpora where caching the exploded
-    shingle table is infeasible) must produce exactly the persist
-    path's pairs — same df prefilter, no cache."""
-    d = load(spark, sf_dir, "documents")["documents"]
-    kw = dict(n=4, threshold=0.005, max_doc_freq=20)
-    a = {tuple(r) for r in ngram_jaccard_pairs(d, "doc_id", "text", **kw).collect()}
-    b = {
-        tuple(r)
-        for r in ngram_jaccard_pairs(
-            d, "doc_id", "text", shingle_reuse="recompute", **kw
-        ).collect()
-    }
-    assert a == b and len(a) > 0
-
-
 def test_lsh_banding_cap_semantics_match_python_reference(spark):
     """Property test for the FULL banding + bucket-cap semantics (r9):
     on hypothesis-generated corpora with forced duplicate clusters, the
@@ -435,17 +419,21 @@ def test_simhash_candidates_semantics_match_python_reference(spark):
     run()
 
 
-def test_arrow_shingle_kernel_matches_jvm_on_pathological_text(spark):
-    """The Arrow mapInArrow shingle kernel (r16, guide §4.2) must be
-    bit-identical to the JVM higher-order-function pipeline — the
-    tokenizer-contract twin check that lets ``SHINGLE_IMPL`` swap freely.
-    Exercises every divergence class the text fuzz ever caught (Java
-    SpecialCasing vs utf8proc: final sigma, Turkish İ; \\x0B whitespace;
-    trailing-empty split semantics; truncated shingles; blank text) plus
-    titlecase digraphs, ligatures and a deterministic random soup."""
+def test_shingle_arrays_match_duckdb_on_pathological_text(spark):
+    """``shingle_arrays`` must produce, per doc, exactly the shingle set
+    the DuckDB oracles build from ``compat.tokens_sql()`` — the oracle
+    half of the tokenizer contract. Exercises every divergence class the
+    text fuzz ever caught (Java SpecialCasing vs utf8proc: final sigma,
+    Turkish İ; \\x0B whitespace; trailing-empty split semantics;
+    truncated shingles; blank text) plus titlecase digraphs, ligatures
+    and a deterministic random soup."""
     import random
 
-    import callysto_spark.operators.dedup as D
+    import duckdb
+    import pyarrow as pa
+
+    from callysto_spark.functions.compat import tokens_sql
+    from callysto_spark.operators.dedup import shingle_arrays
 
     rng = random.Random(0xC0FFEE)
     alphabet = (
@@ -461,45 +449,46 @@ def test_arrow_shingle_kernel_matches_jvm_on_pathological_text(spark):
         "a\tb\x0bc\x0cd\re\nf", "x" * 2000, ("tok " * 50).strip(),
         "  leading and trailing  ", "end\tσ", "ǅungla ǄUNGLA ǆungla",
     ]
-    rows = [(i, t) for i, t in enumerate(fixed + soup)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    for n in (2, 4):
-        old = D.SHINGLE_IMPL
-        try:
-            D.SHINGLE_IMPL = "jvm"
+    texts = fixed + soup
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    with duckdb.connect() as con:
+        con.register(
+            "docs",
+            pa.table({"doc_id": pa.array(range(len(texts)), pa.int64()), "text": texts}),
+        )
+        for n in (2, 4):
             jvm = {
                 (r["doc"], frozenset(r["gs"]), len(r["gs"]))
-                for r in D.shingle_arrays(df, "doc_id", "text", n).collect()
+                for r in shingle_arrays(df, "doc_id", "text", n).collect()
             }
-            D.SHINGLE_IMPL = "arrow"
-            arrow = {
-                (r["doc"], frozenset(r["gs"]), len(r["gs"]))
-                for r in D.shingle_arrays(df, "doc_id", "text", n).collect()
+            oracle_sql = f"""
+                WITH toks AS (SELECT doc_id, {tokens_sql()} AS toks FROM docs)
+                SELECT doc_id, list_distinct(
+                         [array_to_string(toks[i:i+{n - 1}], ' ')
+                          for i in range(1, greatest(length(toks) - {n - 1}, 1) + 1)])
+                FROM toks
+            """
+            oracle = {
+                (doc, frozenset(gs), len(gs)) for doc, gs in con.execute(oracle_sql).fetchall()
             }
-        finally:
-            D.SHINGLE_IMPL = old
-        assert jvm == arrow, (
-            f"n={n}: arrow kernel diverges from JVM kernel: "
-            f"{list(jvm ^ arrow)[:4]}"
-        )
+            assert jvm == oracle, (
+                f"n={n}: shingle_arrays diverges from the DuckDB oracle: "
+                f"{list(jvm ^ oracle)[:4]}"
+            )
 
 
-def test_arrow_shingle_kernel_null_and_type_contract(spark):
-    """NULL text rows are absent (stage_text contract) and the doc
-    column keeps the id column's type through the Arrow kernel."""
-    import callysto_spark.operators.dedup as D
+def test_shingle_arrays_null_and_type_contract(spark):
+    """NULL text rows are absent (stage_text contract), blank text
+    yields the single empty shingle, and the doc column keeps the id
+    column's type."""
+    from callysto_spark.operators.dedup import shingle_arrays
 
     df = spark.createDataFrame(
         [(1, "a b c d e"), (2, None), (3, "")], "doc_id long, text string"
     )
-    old = D.SHINGLE_IMPL
-    try:
-        D.SHINGLE_IMPL = "arrow"
-        out = D.shingle_arrays(df, "doc_id", "text", 4)
-        assert dict(out.dtypes) == {"doc": "bigint", "gs": "array<string>"}
-        rows = {r["doc"]: r["gs"] for r in out.collect()}
-    finally:
-        D.SHINGLE_IMPL = old
+    out = shingle_arrays(df, "doc_id", "text", 4)
+    assert dict(out.dtypes) == {"doc": "bigint", "gs": "array<string>"}
+    rows = {r["doc"]: r["gs"] for r in out.collect()}
     assert set(rows) == {1, 3}, "NULL text must drop the doc, '' must keep it"
     assert rows[3] == [""], "blank text yields the single empty shingle"
     assert sorted(rows[1]) == ["a b c d", "b c d e"]

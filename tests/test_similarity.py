@@ -239,3 +239,34 @@ def test_kmeans_centroids_empty_corpus_returns_empty(spark):
         [(1, [float("nan"), 1.0]), (2, [float("inf"), 0.0])], "id long, emb array<float>"
     )
     assert kmeans_centroids(dirty, "id", "emb", k=4) == []
+
+
+def test_ivf_centroids_follow_regenerated_corpus_across_sessions(spark, tmp_path):
+    """The IVF registry queries' centroid cache lives on the session: a
+    corpus regenerated at the same path must be re-read by a new
+    session, not served from a process-wide cache of the old one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from callysto_spark.queries.llm_ops import _centroids
+
+    def write_corpus(fill: float) -> None:
+        ids = list(range(12))
+        vecs = [[fill + i] * 64 for i in ids]
+        pq.write_table(
+            pa.table(
+                {
+                    "vec_id": pa.array(ids, pa.int64()),
+                    "embedding": pa.array(vecs, pa.list_(pa.float32())),
+                    "label": pa.array([0] * len(ids), pa.int32()),
+                }
+            ),
+            str(tmp_path / "embeddings.parquet"),
+        )
+
+    write_corpus(1.0)
+    a = _centroids(spark, str(tmp_path), k=8)
+    assert a == [(i, [1.0 + i] * 64) for i in range(8)]
+    write_corpus(100.0)
+    b = _centroids(spark.newSession(), str(tmp_path), k=8)
+    assert b == [(i, [100.0 + i] * 64) for i in range(8)]
