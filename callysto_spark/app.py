@@ -8,8 +8,8 @@ Parity map (reference → here), per SURVEY.md §2:
 - `app.flow(name, source, closure)` (`app.rs:340-359`, `types/flows.rs:82-219`)
   → :meth:`App.flow`: a declarative DataFrame transform + sink.
 - `app.table(name)` (`app.rs:573-590`, `types/table.rs`) → :meth:`App.table`
-  (see callysto_spark.streaming.state): keyed state on
-  ``applyInPandasWithState``; durability via checkpoint instead of a
+  (see callysto_spark.streaming.state): keyed state on GroupState, one
+  group per hash bucket of keys; durability via checkpoint instead of a
   changelog topic (recovery = automatic, reference `runtime/recovery.rs`).
 - `app.task` / `app.timer` (`app.rs:243-271`) → driver threads.
 - `app.run()` (`app.rs:644-880`) → start all queries + await.
@@ -280,13 +280,15 @@ class App:
 
     def table_agent(self, name: str, source: SourceSpec | DataFrame, table, **options: Any):
         """Register a stateful processor (reference `types/table_agent.rs`):
-        closure runs per key-group with get/set/del on the table's state.
+        closure runs per key with get/set/del on the table's state.
 
         ``api="tws"`` selects the Spark 4 transformWithState binding
         (streaming/state_v2.py: named states, first-class timers, native
         TTL via ``ttl_ms=``; requires the RocksDB state-store provider).
-        Default is the GroupState binding — same closure contract either
-        way.
+        Default is the GroupState binding (streaming/state.py): grouped
+        physically by hash bucket of keys, it calls the closure once per
+        key and micro-batch with all of the key's rows. Same closure
+        contract either way.
         """
 
         def deco(fn):

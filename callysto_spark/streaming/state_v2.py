@@ -1,7 +1,7 @@
 """CTable on Spark 4's transformWithState (the successor stateful API).
 
-`streaming/state.py` binds tables via ``applyInPandasWithState``
-(GroupState) — one opaque state tuple per key.  This module binds the
+`streaming/state.py` binds tables via GroupState — one opaque state
+value per hash bucket of keys.  This module binds the
 SAME user-closure contract to ``transformWithStateInPandas``
 (StatefulProcessor), which maps the reference's table surface more
 faithfully:

@@ -5,9 +5,12 @@ F1/F2 fixtures)."""
 from __future__ import annotations
 
 import os
+import re
 import shutil
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -946,3 +949,214 @@ def test_aggregating_flow_update_mode(app, spark, tmp_path, sf_dir):
     )
     app.run(await_termination=True, timeout=120)
     assert seen and seen[0] > 0
+
+
+def test_ctable_key_cols_parse_ddl_brackets_and_backticks(spark):
+    """Key columns come from Spark's DDL parser: a split on every comma
+    broke decimal(p,s), map/struct types and quoted names, and the bucket
+    hash is built from these."""
+    from callysto_spark.streaming.state import CTable
+
+    assert CTable("t", "k decimal(10,2), t string", "cnt long").key_cols == ["k", "t"]
+    assert CTable("t", "`a,b` string, `c``d` long, m map<string,int>", "cnt long").key_cols == [
+        "a,b",
+        "c`d",
+        "m",
+    ]
+    assert CTable("t", "x: int, y struct<p:int,q:string> COMMENT 'p, q'", "c long").key_cols == ["x", "y"]
+
+
+def test_table_agent_one_call_per_key_null_key_and_restart(spark, tmp_path):
+    """Bucketed table agent, end to end on RocksDB state: with Arrow
+    batches of 3 rows, a key's 7 rows still reach the closure in ONE
+    call; a NULL key is its own key; two long keys that share the NULL
+    key's bucket and round to one float64 value keep separate counts; and
+    every count continues across an App restart."""
+    from callysto_spark.config import StateStoreConfig
+
+    providers = "spark.sql.streaming.stateStore.providerClass"
+    arrow_batch = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = {k: spark.conf.get(k, None) for k in (providers, arrow_batch)}
+    null_bucket = spark.sql("SELECT pmod(xxhash64(CAST(NULL AS BIGINT)), 256) AS b").first()["b"]
+    # two longs above 2**62 that are one float64 value and hash to that bucket
+    big = sorted(
+        spark.range(1 << 16)
+        .selectExpr("id + 4611686018427387904 AS k")
+        .where(f"pmod(xxhash64(k), 256) = {null_bucket}")
+        .groupBy(F.col("k").cast("double"))
+        .agg(F.collect_list("k").alias("ks"))
+        .where(F.size("ks") >= 2)
+        .first()["ks"]
+    )[:2]
+    assert len(big) == 2
+
+    stream_dir = tmp_path / "stream"
+    stream_dir.mkdir()
+    out_dir = str(tmp_path / "out")
+
+    def put(name, keys):
+        pd.DataFrame({"k": pd.array(keys, dtype="Int64"), "v": range(len(keys))}).to_parquet(
+            stream_dir / name
+        )
+
+    def make_app():
+        a = App(
+            "bucket_sem",
+            spark=spark,
+            checkpoint_root=str(tmp_path / "ckpt"),
+            state_store=StateStoreConfig(provider="rocksdb"),
+        )
+        stream = SourceSpec.parquet_stream(str(stream_dir), schema="k long, v long").load(spark)
+        table = a.table("counts", key_schema="k long", value_schema="cnt long")
+        table.output_schema = "k long, n long, cnt long"
+
+        @a.table_agent(
+            "counter", stream, table, sink=lambda b: b.write.mode("append").parquet(out_dir)
+        )
+        def counter(key, pdf, state):
+            cnt = (state.get() or (0,))[0] + len(pdf)
+            state.set(cnt)
+            return pd.DataFrame({"k": [key[0]], "n": [len(pdf)], "cnt": [cnt]})
+
+        return a
+
+    def run():
+        a = make_app()
+        a.run(await_termination=True, timeout=120)
+        a.stop()
+        return {(r["k"], r["n"], r["cnt"]) for r in spark.read.parquet(out_dir).collect()}
+
+    try:
+        spark.conf.set(arrow_batch, "3")
+        put("a.parquet", [7] * 7 + [None, None, 1, big[0], big[1], big[1]])
+        first = run()
+        assert first == {(7, 7, 7), (None, 2, 2), (1, 1, 1), (big[0], 1, 1), (big[1], 2, 2)}
+
+        put("b.parquet", [7, 7, None, big[0]])
+        second = run() - first
+        assert second == {(7, 2, 9), (None, 1, 3), (big[0], 1, 2)}
+    finally:
+        for k, v in prev.items():
+            if v is not None:
+                spark.conf.set(k, v)
+            else:
+                spark.conf.unset(k)
+
+
+def test_table_agent_nan_and_null_double_keys_stay_apart(spark, tmp_path):
+    """A double key column: NULL and NaN are two keys (pandas shows both
+    as NaN), -0.0 and 0.0 are one (as in Spark's groupBy), and the NaN
+    key's count continues across an App restart."""
+    stream_dir = tmp_path / "stream"
+    stream_dir.mkdir()
+    out_dir = str(tmp_path / "out")
+    nan = float("nan")
+
+    def put(name, keys):  # pyarrow keeps None a NULL double and nan a NaN value
+        table = pa.table({"d": pa.array(keys, pa.float64()), "v": pa.array(range(len(keys)), pa.int64())})
+        pq.write_table(table, stream_dir / name)
+
+    def run():
+        a = App("nan_keys", spark=spark, checkpoint_root=str(tmp_path / "ckpt"))
+        stream = SourceSpec.parquet_stream(str(stream_dir), schema="d double, v long").load(spark)
+        table = a.table("counts", key_schema="d double", value_schema="cnt long")
+        table.output_schema = "d double, null_key boolean, n long, cnt long"
+
+        @a.table_agent("counter", stream, table, sink=lambda b: b.write.mode("append").parquet(out_dir))
+        def counter(key, pdf, state):
+            cnt = (state.get() or (0,))[0] + len(pdf)
+            state.set(cnt)
+            return pd.DataFrame({"d": [key[0]], "null_key": [key[0] is None], "n": [len(pdf)], "cnt": [cnt]})
+
+        a.run(await_termination=True, timeout=120)
+        a.stop()
+        out = spark.read.parquet(out_dir).toPandas()
+        return {
+            ("null" if r.null_key else repr(abs(r.d)), r.n, r.cnt) for r in out.itertuples()
+        }
+
+    put("a.parquet", [1.5, None, nan, nan, -0.0, 0.0])
+    first = run()
+    assert first == {("1.5", 1, 1), ("null", 1, 1), ("nan", 2, 2), ("0.0", 2, 2)}
+
+    put("b.parquet", [nan, None, 0.0])
+    assert run() - first == {("nan", 1, 3), ("null", 1, 2), ("0.0", 1, 3)}
+
+
+def test_table_agent_checkpoint_format_is_pinned(spark, tmp_path, sf_dir):
+    """The checkpoint format: one FlatMapGroupsInPandasWithState grouped
+    on the single ``__bucket`` column with a binary state value. A
+    checkpoint written by a plain per-key applyInPandasWithState on the
+    table's value schema must be REFUSED on resume by Spark's
+    state-schema check, never silently restarted from empty state."""
+    from pyspark.errors import StreamingQueryException
+
+    stream_dir = tmp_path / "stream"
+    stream_dir.mkdir()
+    shutil.copy(f"{sf_dir}/events.parquet", stream_dir / "a.parquet")
+    ckpt_root = str(tmp_path / "ckpt")
+
+    def stream():
+        src = SourceSpec.parquet_stream(
+            str(stream_dir),
+            schema="event_id long, ts long, user_id long, event_type string, value double, props string",
+        )
+        return src.load(spark).withColumn(
+            "parity", F.when(F.col("event_id") % 2 == 0, "even").otherwise("odd")
+        )
+
+    def parity_agent(key, pdf, state):
+        cnt = (state.get() or (0,))[0] + len(pdf)
+        state.set(cnt)
+        return pd.DataFrame({"parity": [key[0]], "cnt": [cnt]})
+
+    def noop(b):
+        b.write.format("noop").mode("overwrite").save()
+
+    def make_app(root):
+        a = App("fmt", spark=spark, checkpoint_root=root)
+        table = a.table("parity_counts", key_schema="parity string", value_schema="cnt long")
+        table.output_schema = "parity string, cnt long"
+        a.table_agent("parity_agent", stream(), table, sink=noop)(parity_agent)
+        return a
+
+    a = make_app(str(tmp_path / "fresh"))
+    a.run(await_termination=True, timeout=120)
+    plan = a.queries[0]._jsq.explainInternal(False)
+    a.stop()
+    assert plan.count("FlatMapGroupsInPandasWithState") == 1
+    assert re.search(
+        r"FlatMapGroupsInPandasWithState \w+\(.*?\)#\d+, \[__bucket#\d+\], \[.*?\], "
+        r"\[StructField\(bucket,BinaryType,true\)\]",
+        plan,
+    ), plan
+
+    # a per-key checkpoint at the agent's location ...
+    def per_key(key, pdfs, state):
+        cnt = state.getOption[0] if state.exists else 0
+        for pdf in pdfs:
+            cnt += len(pdf)
+        state.update((cnt,))
+        yield pd.DataFrame({"parity": [key[0]], "cnt": [cnt]})
+
+    q = (
+        stream()
+        .groupBy("parity")
+        .applyInPandasWithState(per_key, "parity string, cnt long", "cnt long", "update", "NoTimeout")
+        .writeStream.outputMode("update")
+        .foreachBatch(lambda b, _: noop(b))
+        .option("checkpointLocation", f"{ckpt_root}/parity_agent")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+
+    # ... is refused when the bucketed table agent resumes it
+    shutil.copy(f"{sf_dir}/events.parquet", stream_dir / "b.parquet")
+    a = make_app(ckpt_root)
+    try:
+        with pytest.raises(StreamingQueryException, match="STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE"):
+            a.run(await_termination=True, timeout=120)
+    finally:
+        a.stop()
