@@ -11,10 +11,16 @@ Parity map (reference → here), per SURVEY.md §2:
   (see callysto_spark.streaming.state): keyed state on GroupState, one
   group per hash bucket of keys; durability via checkpoint instead of a
   changelog topic (recovery = automatic, reference `runtime/recovery.rs`).
+  :meth:`App.table_agent` binds a closure to it through that one
+  GroupState binding (reference `types/table_agent.rs:26-103`).
 - `app.task` / `app.timer` (`app.rs:243-271`) → driver threads.
 - `app.run()` (`app.rs:644-880`) → start all queries + await.
 - app-wide shared state (`app.rs:103-107`: instance-local, not
   distributed) → :class:`Context.state`, a driver-local dict.
+
+Agent options are keyword-only parameters (``trigger``; ``timeout``,
+``sink``, ``trigger`` on table agents), so a misspelt or unknown option
+raises TypeError when the agent is registered instead of being dropped.
 
 The exactly-once enum the reference leaves ``todo!()``
 (`types/table.rs:149-159`) is inherited from Spark: checkpoint +
@@ -27,7 +33,7 @@ import os
 import threading
 import time
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -146,10 +152,16 @@ class Context:
 
 @dataclass
 class _Agent:
+    """A registered agent. ``stateful`` marks a table agent: ``fn`` is then
+    the bound plan builder (DataFrame → DataFrame) and ``sink`` its
+    durable foreachBatch writer (``None`` → memory sink)."""
+
     name: str
     source: SourceSpec
-    fn: Callable[[DataFrame, Context], Any]
-    options: dict[str, Any] = field(default_factory=dict)
+    fn: Callable[..., Any]
+    trigger: dict[str, Any] | None = None
+    stateful: bool = False
+    sink: Callable | None = None
 
 
 @dataclass
@@ -230,13 +242,20 @@ class App:
         return SourceSpec.dataframe(spec_or_df)
 
     # ------------------------------------------------------------ register
-    def agent(self, name: str, source: SourceSpec | DataFrame, **options: Any):
+    def agent(
+        self,
+        name: str,
+        source: SourceSpec | DataFrame,
+        *,
+        trigger: dict[str, Any] | None = None,
+    ):
         """Register a stream processor; closure gets (micro-batch DataFrame,
         Context) — the DataFrame replaces the reference's per-message
-        ``CStream`` pull loop."""
+        ``CStream`` pull loop. ``trigger`` is passed to
+        ``DataStreamWriter.trigger`` (default ``{"availableNow": True}``)."""
 
         def deco(fn: Callable[[DataFrame, Context], Any]):
-            self._agents[name] = _Agent(name, self.source(source), fn, options)
+            self._agents[name] = _Agent(name, self.source(source), fn, trigger)
             return fn
 
         return deco
@@ -278,35 +297,35 @@ class App:
         self._tables[name] = tbl
         return tbl
 
-    def table_agent(self, name: str, source: SourceSpec | DataFrame, table, **options: Any):
+    def table_agent(
+        self,
+        name: str,
+        source: SourceSpec | DataFrame,
+        table,
+        *,
+        timeout: str = "NoTimeout",
+        sink: Callable | None = None,
+        trigger: dict[str, Any] | None = None,
+    ):
         """Register a stateful processor (reference `types/table_agent.rs`):
         closure runs per key with get/set/del on the table's state.
 
-        ``api="tws"`` selects the Spark 4 transformWithState binding
-        (streaming/state_v2.py: named states, first-class timers, native
-        TTL via ``ttl_ms=``; requires the RocksDB state-store provider).
-        Default is the GroupState binding (streaming/state.py): grouped
-        physically by hash bucket of keys, it calls the closure once per
-        key and micro-batch with all of the key's rows. Same closure
-        contract either way.
+        Bound through GroupState (streaming/state.py): grouped physically
+        by hash bucket of keys, it calls the closure once per key and
+        micro-batch with all of the key's rows. ``timeout`` is a
+        GroupState timeout mode (``"NoTimeout"``,
+        ``"ProcessingTimeTimeout"``, ``"EventTimeTimeout"``); ``sink`` is a
+        durable ``f(df)`` / ``f(df, batch_id)`` writer — without one the
+        results go to a memory sink with an ephemeral checkpoint;
+        ``trigger`` is as for :meth:`agent`.
         """
 
         def deco(fn):
-            if options.get("api") == "tws":
-                from callysto_spark.streaming.state_v2 import bind_table_processor
+            from callysto_spark.streaming.state import bind_table_agent
 
-                bound = bind_table_processor(
-                    table,
-                    fn,
-                    timeout=options.get("timeout", "NoTimeout"),
-                    ttl_ms=options.get("ttl_ms"),
-                )
-            else:
-                from callysto_spark.streaming.state import bind_table_agent
-
-                bound = bind_table_agent(table, fn, timeout=options.get("timeout", "NoTimeout"))
+            bound = bind_table_agent(table, fn, timeout=timeout)
             self._agents[name] = _Agent(
-                name, self.source(source), bound, dict(options, stateful=True, table=table)
+                name, self.source(source), bound, trigger, stateful=True, sink=sink
             )
             return fn
 
@@ -390,7 +409,7 @@ class App:
         # Python DataSource streams fall back to single-batch availableNow,
         # so a per-trigger admission cap would silently leave backlog
         # unprocessed when the one batch "drains": reject the combination.
-        trigger = agent.options.get("trigger", {"availableNow": True})
+        trigger = {"availableNow": True} if agent.trigger is None else agent.trigger
         src_opts = getattr(agent.source, "options", {}) or {}
         has_cap = any(k.lower() == "maxrecordspertrigger" for k in src_opts)
         if trigger.get("availableNow") and agent.source.kind == "memtopic" and has_cap:
@@ -403,13 +422,13 @@ class App:
             )
         df = agent.source.load(self.spark)
         qname = _identifier(f"{self.name}_{agent.name}")
-        if agent.options.get("stateful"):
+        if agent.stateful:
             df = agent.fn(df)  # bound stateful transform builds the plan
-            writer = df.writeStream.outputMode(agent.options.get("output_mode", "update"))
-            sink = agent.options.get("sink")
-            if sink is not None:
+            # bind_table_agent emits update-mode output only
+            writer = df.writeStream.outputMode("update")
+            if agent.sink is not None:
                 # durable sink → checkpoint recovery works across restarts
-                writer = writer.foreachBatch(_as_foreach_batch(sink))
+                writer = writer.foreachBatch(_as_foreach_batch(agent.sink))
                 ckpt = f"{self.checkpoint_root}/{agent.name}"
             else:
                 # memory sink: test convenience only. Spark memory sinks
@@ -425,7 +444,7 @@ class App:
             q = (
                 writer.queryName(qname)
                 .option("checkpointLocation", ckpt)
-                .trigger(**agent.options.get("trigger", {"availableNow": True}))
+                .trigger(**trigger)
                 .start()
             )
             self._register_query(q, agent.name)
@@ -440,7 +459,7 @@ class App:
                 df.writeStream.foreachBatch(process)
                 .queryName(qname)
                 .option("checkpointLocation", f"{self.checkpoint_root}/{agent.name}")
-                .trigger(**agent.options.get("trigger", {"availableNow": True}))
+                .trigger(**trigger)
                 .start()
             )
             self._register_query(q, agent.name)

@@ -18,11 +18,11 @@ Codec status by modality:
   ``resize_media(decoder='png')`` run on the stdlib-zlib PNG codec in
   ``operators/png_py.py`` (all five scanline filters on decode,
   nearest-neighbor resample, valid re-encode).
-- JPEG/video codec calls (PIL/ffmpeg) are NOT in this container;
-  ``decoder='stub'`` raises NotImplementedError at the exact seam a
-  codec plugs into, and ``decoder='fake'`` derives deterministic
-  pseudo-features from the bytes so the Spark-side plumbing (schema,
-  batch shape, partitioning) is fully testable.
+- JPEG/video codec libraries (PIL/ffmpeg) are NOT in this build:
+  ``decoder='fake'`` derives deterministic pseudo-features from the
+  bytes so the Spark-side plumbing (schema, batch shape, partitioning)
+  is fully testable, and any decoder a function does not implement
+  (``'stub'`` included) raises ValueError on the driver.
 """
 
 from __future__ import annotations
@@ -47,6 +47,16 @@ def _check_on_error(on_error: str) -> None:
         raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
 
 
+def _check_decoder(decoder: str, supported: tuple[str, ...]) -> None:
+    """Reject on the driver a decoder the function does not implement —
+    it would otherwise fall through to the sha256 stand-in."""
+    if decoder not in supported:
+        raise ValueError(
+            f"decoder {decoder!r} is unavailable: no codec library for it is in "
+            f"this build (supported: {', '.join(map(repr, supported))})"
+        )
+
+
 def _fake_features(payload: bytes, dim: int) -> list[float]:
     """Deterministic pseudo-embedding: sha256-seeded floats in [0,1).
     Stands in for a real encoder; stable across runs/engines."""
@@ -68,18 +78,14 @@ def extract_features(
 ) -> DataFrame:
     """binary media column → fixed-dim feature vectors via mapInPandas.
 
-    ``decoder='stub'`` marks where a real codec (PIL decode, resize,
-    frame-sample, mel-spectrogram) plugs in; 'fake' produces
-    deterministic features for plumbing tests.
+    Only ``decoder='fake'`` exists: deterministic features for plumbing
+    tests. A real codec (PIL decode, resize, frame-sample,
+    mel-spectrogram) would plug in as another decoder.
     """
+    _check_decoder(decoder, ("fake",))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if decoder == "stub":
-                raise NotImplementedError(
-                    "real media decode requires an image/audio codec library; "
-                    "plug PIL/ffmpeg here (decode → resize/frame-sample → encode features)"
-                )
             payloads = pdf["content"]
             yield pd.DataFrame(
                 {
@@ -107,8 +113,8 @@ def resize_media(
 
     ``decoder='png'`` is a REAL dependency-free codec path: stdlib-zlib
     PNG decode → nearest-neighbor resample → PNG re-encode
-    (``operators/png_py.py``). 'stub' marks the decode→resize→re-encode
-    seam for formats needing PIL (JPEG etc); 'fake' emits a
+    (``operators/png_py.py``). Formats needing PIL (JPEG etc) have no
+    decoder in this build; 'fake' emits a
     deterministic payload of the target dimensions' byte budget so
     batch shape and schema round-trip is testable. Output schema ==
     input MEDIA_SCHEMA with width/height updated — resize composes with
@@ -120,15 +126,10 @@ def resize_media(
     job.
     """
     _check_on_error(on_error)
+    _check_decoder(decoder, ("fake", "png"))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if decoder == "stub":
-                raise NotImplementedError(
-                    "real resize of non-PNG formats requires an image codec; "
-                    "plug PIL here (decode → resize((w,h)) → encode); PNG is "
-                    "handled dependency-free by decoder='png'"
-                )
             if decoder == "png":
                 from callysto_spark.operators.png_py import (
                     decode_png,
@@ -186,7 +187,7 @@ def sample_frames(
     (1→N row expansion inside the Arrow batch — the frame table stays
     distributed; no driver involvement, no shuffle).
 
-    'stub' is the ffmpeg seam; 'fake' derives ``duration_ms/every_ms``
+    Only 'fake' exists (no ffmpeg in this build): it derives ``duration_ms/every_ms``
     deterministic frames per row (capped at ``max_frames``), so the
     exploding batch shape, schema, and cap are all testable. Rows with
     no duration (e.g. still images) yield one frame at ts 0.
@@ -195,14 +196,10 @@ def sample_frames(
         # validate on the DRIVER: every_ms=0 would ZeroDivisionError
         # inside a mapInPandas worker with an opaque executor traceback
         raise ValueError(f"sample_frames every_ms must be >= 1, got {every_ms}")
+    _check_decoder(decoder, ("fake",))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if decoder == "stub":
-                raise NotImplementedError(
-                    "real frame sampling requires ffmpeg/av; plug it here "
-                    "(demux → seek every_ms → decode frame → encode)"
-                )
             out: dict[str, list] = {k: [] for k in ("media_id", "frame_idx", "ts_ms", "content", "width", "height")}
             for _, row in pdf.iterrows():
                 dur = row["duration_ms"]

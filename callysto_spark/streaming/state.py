@@ -59,7 +59,7 @@ from __future__ import annotations
 import datetime
 import pickle
 from collections.abc import Callable, Iterator
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any
 
 import numpy as np
@@ -107,7 +107,6 @@ class CTable:
     key_schema: str  # e.g. "parity string" — the groupBy columns
     value_schema: str  # state tuple DDL, e.g. "cnt long, total double"
     output_schema: str | None = None  # rows emitted by the table agent
-    data: dict = field(default_factory=dict)  # batch-mode/in-driver mirror
 
     @property
     def key_cols(self) -> list[str]:

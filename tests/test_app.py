@@ -144,212 +144,6 @@ def test_task_timer_service_lifecycle(app, spark):
     assert app.state["svc"] == "stopped"
 
 
-def _has_protobuf() -> bool:
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def test_table_agent_tws_builds_plan(spark, tmp_path, sf_dir):
-    """The tws binding must build a valid streaming plan with the
-    declared output schema regardless of environment (execution needs
-    google.protobuf — runtime-gated, like the connector jars)."""
-    from callysto_spark.streaming.state import CTable
-    from callysto_spark.streaming.state_v2 import bind_table_processor
-
-    src = SourceSpec.parquet_stream(
-        f"{tmp_path}",  # never started — plan-level only
-        schema="event_id long, parity string",
-    )
-    table = CTable(name="t", key_schema="parity string", value_schema="cnt long")
-    table.output_schema = "parity string, cnt long"
-    build = bind_table_processor(table, lambda k, pdf, st: None)
-    out = build(src.load(spark))
-    assert out.isStreaming
-    assert [f.name for f in out.schema.fields] == ["parity", "cnt"]
-
-
-def test_tws_timer_ttl_plan_and_processor_logic(spark, tmp_path):
-    """Environment-independent tws coverage: (a) the timeMode string
-    reaches the analyzed streaming plan (ProcessingTime timers); (b) the
-    StatefulProcessor's logic — TTL wiring at init, per-batch state
-    accumulation, timer arming, expired-timer callback — exercised
-    directly with fake state handles (the streaming Python runner needs
-    google.protobuf, absent in this image; execution parity is the
-    skipped test below)."""
-    from callysto_spark.streaming.state import CTable
-    from callysto_spark.streaming.state_v2 import bind_table_processor
-
-    stream_dir = tmp_path / "plan_src"
-    stream_dir.mkdir()
-    src = SourceSpec.parquet_stream(str(stream_dir), schema="event_id long, parity string")
-    table = CTable(name="cnts", key_schema="parity string", value_schema="cnt long")
-    table.output_schema = "parity string, cnt long"
-
-    armed: list[int] = []
-
-    def closure(key, pdf, state):
-        if state.timed_out:
-            state.delete()
-            return pd.DataFrame({"parity": [key[0]], "cnt": [-1]})
-        prev = state.get()
-        cnt = (prev[0] if prev else 0) + len(pdf)
-        state.set(cnt)
-        state.set_timeout_ms(5_000)
-        return pd.DataFrame({"parity": [key[0]], "cnt": [cnt]})
-
-    build = bind_table_processor(table, closure, timeout="ProcessingTimeTimeout", ttl_ms=60_000)
-
-    # (a) plan level: timeMode lands in the analyzed plan
-    out = build(src.load(spark))
-    assert out.isStreaming
-    assert [f.name for f in out.schema.fields] == ["parity", "cnt"]
-    plan = out._jdf.queryExecution().analyzed().toString()
-    assert "TransformWithState" in plan and "ProcessingTime" in plan
-
-    # (b) processor logic with fake handles
-    class FakeValueState:
-        def __init__(self):
-            self.v = None
-
-        def exists(self):
-            return self.v is not None
-
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = v
-
-        def clear(self):
-            self.v = None
-
-    class FakeHandle:
-        def __init__(self):
-            self.ttl = None
-            self.vs = FakeValueState()
-            self.timers: list[int] = []  # tws contract: timers ACCUMULATE
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            assert name == "cnts"
-            self.ttl = ttlDurationMs
-            return self.vs
-
-        def registerTimer(self, ts):
-            armed.append(ts)
-            self.timers.append(ts)
-
-        def listTimers(self):
-            return list(self.timers)
-
-        def deleteTimer(self, ts):
-            self.timers.remove(ts)
-
-    class FakeTimerValues:
-        def getCurrentProcessingTimeInMs(self):
-            return 1_000_000
-
-    proc = build.processor_cls()
-    handle = FakeHandle()
-    proc.init(handle)
-    assert handle.ttl == 60_000, "ttl_ms must reach getValueState"
-
-    batches = list(
-        proc.handleInputRows(("odd",), iter([pd.DataFrame({"event_id": [1, 3, 5]})]), FakeTimerValues())
-    )
-    assert len(batches) == 1 and batches[0]["cnt"].tolist() == [3]
-    assert handle.vs.v == (3,), "state must hold the accumulated count"
-    assert armed == [1_005_000], "set_timeout_ms arms now+5s"
-
-    # second batch accumulates on existing state
-    batches = list(
-        proc.handleInputRows(("odd",), iter([pd.DataFrame({"event_id": [7]})]), FakeTimerValues())
-    )
-    assert batches[0]["cnt"].tolist() == [4]
-    # re-arming every batch must REPLACE the pending timer, not stack a
-    # second one (GroupState.setTimeoutDuration parity; tws registerTimer
-    # alone would accumulate and fire N eviction callbacks)
-    assert handle.timers == [1_005_000], f"pending timers stacked: {handle.timers}"
-
-    # timer expiry: closure sees timed_out=True, clears state, emits -1
-    expired = list(proc.handleExpiredTimer(("odd",), FakeTimerValues(), None))
-    assert expired[0]["cnt"].tolist() == [-1]
-    assert handle.vs.v is None, "closure's delete() must clear the value state"
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithState's Python runner requires google.protobuf, "
-    "not shipped in this image (same environment gating as the avro/kafka jars)",
-)
-def test_table_agent_tws_parity_counts_and_recovery(spark, tmp_path, sf_dir):
-    """The same odd/even workload on the transformWithState binding
-    (api='tws', Spark 4 StatefulProcessor + RocksDB provider): identical
-    closure, identical results, checkpoint recovery across restart."""
-    from callysto_spark.config import StateStoreConfig
-
-    prev_provider = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    stream_dir = tmp_path / "stream"
-    stream_dir.mkdir()
-    shutil.copy(f"{sf_dir}/events.parquet", stream_dir / "a.parquet")
-    out_dir = str(tmp_path / "out")
-
-    def make_app():
-        a = App(
-            "tws_state",
-            spark=spark,
-            checkpoint_root=str(tmp_path / "ckpt"),
-            state_store=StateStoreConfig(provider="rocksdb"),
-        )
-        src = SourceSpec.parquet_stream(
-            str(stream_dir),
-            schema="event_id long, ts long, user_id long, event_type string, value double, props string",
-        )
-        stream = src.load(spark).withColumn(
-            "parity", F.when(F.col("event_id") % 2 == 0, "even").otherwise("odd")
-        )
-        table = a.table("tws_counts", key_schema="parity string", value_schema="cnt long")
-        table.output_schema = "parity string, cnt long"
-
-        @a.table_agent(
-            "tws_agent",
-            stream,
-            table,
-            api="tws",
-            sink=lambda b: b.write.mode("append").parquet(out_dir),
-        )
-        def tws_agent(key, pdf, state):
-            prev = state.get()
-            cnt = (prev[0] if prev else 0) + len(pdf)
-            state.set(cnt)
-            return pd.DataFrame({"parity": [key[0]], "cnt": [cnt]})
-
-        return a
-
-    try:
-        a1 = make_app()
-        a1.run(await_termination=True, timeout=120)
-        a1.stop()
-        n = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-        first = {r["parity"]: r["cnt"] for r in spark.read.parquet(out_dir).collect()}
-        assert first == {"even": n // 2, "odd": n // 2}
-
-        shutil.copy(f"{sf_dir}/events.parquet", stream_dir / "b.parquet")
-        a2 = make_app()
-        a2.run(await_termination=True, timeout=120)
-        a2.stop()
-        rows = spark.read.parquet(out_dir).groupBy("parity").agg(F.max("cnt").alias("cnt")).collect()
-        assert {r["parity"]: r["cnt"] for r in rows} == {"even": n, "odd": n}
-    finally:
-        if prev_provider is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev_provider)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
 def test_service_dependency_start_order(app, spark):
     """Reference starts a service's dependencies before the service
     itself (`types/service.rs:146-151`)."""
@@ -467,172 +261,36 @@ def test_table_agent_processing_time_timeout(spark, tmp_path, sf_dir):
     assert ("even", n // 2) in rows  # run 1
 
 
-def test_tws_timer_firing_order_and_ttl_eviction(spark):
-    """Runner-less semantics check for the tws binding: (a) expired
-    timers fire in timestamp order across keys (Spark's documented timer
-    contract); (b) TTL-evicted state reads as absent in the next batch
-    (ValueState ttl expires per-update), and a post-eviction write
-    re-arms the TTL clock. Simulated with a deterministic fake runtime —
-    the real runner needs google.protobuf, absent in this image."""
-    from callysto_spark.streaming.state import CTable
-    from callysto_spark.streaming.state_v2 import bind_table_processor
-
-    table = CTable(name="t", key_schema="k string", value_schema="cnt long")
-    table.output_schema = "k string, cnt long"
-
-    def closure(key, pdf, state):
-        if state.timed_out:
-            return pd.DataFrame({"k": [key[0]], "cnt": [-1]})
-        prev = state.get()
-        cnt = (prev[0] if prev else 0) + len(pdf)
-        state.set(cnt)
-        state.set_timeout_ms(1_000 if key[0] == "b" else 3_000)
-        return pd.DataFrame({"k": [key[0]], "cnt": [cnt]})
-
-    build = bind_table_processor(table, closure, timeout="ProcessingTimeTimeout", ttl_ms=2_000)
-
-    class FakeRuntime:
-        """Per-key ValueState with TTL + a global timer queue, modeled on
-        the documented transformWithState semantics: ttl measured from
-        the last update; expired timers delivered oldest-first."""
-
-        def __init__(self, ttl_ms):
-            self.now = 0
-            self.ttl = ttl_ms
-            self.values: dict[str, tuple] = {}
-            self.written: dict[str, int] = {}
-            self.timers: list[tuple[int, str]] = []
-            self.current_key = None
-
-        def handle_for(self, proc):
-            rt = self
-
-            class VS:
-                def exists(self):
-                    k = rt.current_key
-                    return k in rt.values and rt.now - rt.written[k] < rt.ttl
-
-                def get(self):
-                    return rt.values[rt.current_key]
-
-                def update(self, v):
-                    rt.values[rt.current_key] = v
-                    rt.written[rt.current_key] = rt.now
-
-                def clear(self):
-                    rt.values.pop(rt.current_key, None)
-
-            class Handle:
-                def getValueState(self, name, schema, ttlDurationMs=None):
-                    assert ttlDurationMs == rt.ttl
-                    return VS()
-
-                def registerTimer(self, ts):
-                    rt.timers.append((ts, rt.current_key))
-
-                def listTimers(self):
-                    return [ts for ts, k in rt.timers if k == rt.current_key]
-
-                def deleteTimer(self, ts):
-                    rt.timers.remove((ts, rt.current_key))
-
-            return Handle()
-
-        class TV:
-            def __init__(self, now):
-                self._n = now
-
-            def getCurrentProcessingTimeInMs(self):
-                return self._n
-
-        def feed(self, proc, key, n_rows):
-            self.current_key = key
-            return list(
-                proc.handleInputRows((key,), iter([pd.DataFrame({"x": range(n_rows)})]), self.TV(self.now))
-            )
-
-        def advance_and_fire(self, proc, to_ms):
-            self.now = to_ms
-            due = sorted(t for t in self.timers if t[0] <= to_ms)
-            self.timers = [t for t in self.timers if t[0] > to_ms]
-            fired = []
-            for ts, key in due:  # oldest-first, the documented order
-                self.current_key = key
-                for out in proc.handleExpiredTimer((key,), self.TV(self.now), None):
-                    fired.append((key, out["cnt"].tolist()))
-            return fired
-
-    rt = FakeRuntime(ttl_ms=2_000)
-    proc = build.processor_cls()
-    proc.init(rt.handle_for(proc))
-
-    rt.feed(proc, "a", 2)   # arms timer at 3000
-    rt.feed(proc, "b", 1)   # arms timer at 1000
-    # (a) firing order: b's 1000 precedes a's 3000 even though a armed first
-    fired = rt.advance_and_fire(proc, 3_500)
-    assert [k for k, _ in fired] == ["b", "a"], "timers must fire in timestamp order"
-
-    # (b) TTL eviction: at t=3500, a's state (written t=0, ttl 2000) has
-    # expired — the next batch must see a fresh counter, not 2+1
-    out = rt.feed(proc, "a", 1)
-    assert out[0]["cnt"].tolist() == [1], "TTL-evicted state must read as absent"
-    # the re-write re-arms the ttl clock: still live inside the window
-    rt.now = 4_500
-    out = rt.feed(proc, "a", 1)
-    assert out[0]["cnt"].tolist() == [2], "post-eviction write restarts the TTL window"
+@pytest.mark.parametrize(
+    "register",
+    [
+        # the removed binding selector
+        lambda a, src, table: a.table_agent("t", src, table, api="tws"),
+        # agents have no sink: their closure writes
+        lambda a, src, table: a.agent("t", src, sink=print),
+        # a misspelt timeout must not run the agent with none
+        lambda a, src, table: a.table_agent("t", src, table, timout="ProcessingTimeTimeout"),
+    ],
+    ids=["table_agent_api", "agent_sink", "table_agent_timout"],
+)
+def test_agent_options_are_closed_keywords(app, tmp_path, register):
+    """Agent options are keyword-only parameters: an unknown keyword
+    raises TypeError at registration instead of being silently dropped."""
+    src = SourceSpec.parquet_stream(str(tmp_path), schema="k string")
+    table = app.table("t", key_schema="k string", value_schema="cnt long")
+    with pytest.raises(TypeError, match="unexpected keyword argument"):
+        register(app, src, table)
+    assert app._agents == {}
 
 
-def test_tws_state_value_schema_encoding_roundtrip(spark):
-    """Runner-less closure of the tws gate: the one runner-dependent
-    surface not otherwise covered is the encoding of what
-    TableStateV2.set() actually STORES against the table's declared
-    value_schema (the runner serializes that stored tuple, per that
-    schema). Drive the real TableStateV2 set/get path into a recording
-    state handle, then push the STORED representation through Spark's
-    schema-driven encoding — a field-order/type/shape mismatch between
-    the shim and the declared schema fails here rather than only on a
-    protobuf-enabled cluster."""
-    import datetime as dt
-
-    from callysto_spark.streaming.state_v2 import TableStateV2
-
-    class RecordingValueState:
-        def __init__(self):
-            self.v = None
-
-        def exists(self):
-            return self.v is not None
-
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = v
-
-        def clear(self):
-            self.v = None
-
-    cases = [
-        ("cnt long", (42,)),
-        ("cnt long, name string, score double", (7, "abc", 1.25)),
-        ("ts timestamp, flag boolean", (dt.datetime(2024, 3, 1, 12, 0, 5), True)),
-        ("xs array<long>, m map<string,long>", ([1, 2, 3], {"a": 1})),
-        ("nested struct<a:long,b:string>", ((5, "in"),)),
-    ]
-    for schema, value in cases:
-        vs = RecordingValueState()
-        ts = TableStateV2(vs, handle=None, timer_values=None)
-        ts.set(*value)
-        stored = vs.v
-        assert isinstance(stored, tuple), "set() must store a positional tuple"
-        assert ts.get() == value, f"{schema}: get() must return what set() stored"
-        # the runner would serialize `stored` against the declared
-        # value_schema: prove that encoding round-trips value-identically
-        got = tuple(spark.createDataFrame([stored], schema=schema).collect()[0])
-        norm = tuple(tuple(v) if isinstance(v, tuple) else v for v in got)
-        assert norm == value, f"{schema}: {norm} != {value}"
-        ts.delete()
-        assert not ts.exists and ts.get() is None
+def test_explicit_available_now_trigger_rejects_memtopic_cap(app, tmp_path):
+    """The memtopic maxRecordsPerTrigger + availableNow rejection holds
+    for an explicit ``trigger=`` as well as the default, on table agents."""
+    src = SourceSpec.memtopic("cap", str(tmp_path / "broker"), partitions=1, maxRecordsPerTrigger="5")
+    table = app.table("t", key_schema="key string", value_schema="cnt long")
+    app.table_agent("capped", src, table, trigger={"availableNow": True})(lambda k, pdf, st: None)
+    with pytest.raises(ValueError, match="availableNow"):
+        app.run(await_termination=False)
 
 
 def test_foreach_batch_adapter_without_signature_keeps_batch_id():

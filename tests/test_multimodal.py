@@ -38,6 +38,26 @@ def test_stub_decoder_raises_at_seam(spark):
     assert "NotImplementedError" in str(err.value) or "codec" in str(err.value)
 
 
+@pytest.mark.parametrize(
+    "call",
+    [
+        lambda mm, df: mm.resize_media(df, 8, 8, decoder="PNG"),
+        lambda mm, df: mm.resize_media(df, 8, 8, decoder="stub"),
+        lambda mm, df: mm.extract_features(df, decoder="png"),
+        lambda mm, df: mm.sample_frames(df, decoder="png"),
+    ],
+    ids=["resize_PNG", "resize_stub", "features_png", "frames_png"],
+)
+def test_unimplemented_decoder_rejected_on_driver(spark, call):
+    """A decoder a function does not implement used to fall through to the
+    sha256 stand-in and return fake bytes; it now fails before any plan
+    runs (no collect needed)."""
+    from callysto_spark.operators import multimodal
+
+    with pytest.raises(ValueError, match="no codec library"):
+        call(multimodal, _media_df(spark))
+
+
 def test_resize_preserves_schema_and_composes(spark):
     from callysto_spark.operators.multimodal import resize_media
 

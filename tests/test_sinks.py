@@ -216,40 +216,3 @@ def test_idempotent_marker_pruning(spark, tmp_path):
     w(df, 7)  # replay of a retained batch: still skipped
     w(df, 3)  # pruned marker: REPLAYS (outside Spark's replay window by construction)
     assert calls == [0, 1, 2, 3, 4, 5, 6, 7, 3]
-
-
-def test_table_state_v2_timer_time_domain_guards():
-    """v1 GroupState raises when a timeout call doesn't match the
-    registered timeout mode; the v2 shim must too — arming a wall-clock
-    timer under EventTime mode would wait on the watermark and never
-    fire with historical timestamps (r7 review)."""
-    import pytest
-
-    from callysto_spark.streaming.state_v2 import TableStateV2
-
-    class _TV:
-        def getCurrentProcessingTimeInMs(self):
-            return 1_000_000
-
-    class _H:
-        def __init__(self):
-            self.timers = []
-
-        def listTimers(self):
-            return list(self.timers)
-
-        def deleteTimer(self, t):
-            self.timers.remove(t)
-
-        def registerTimer(self, t):
-            self.timers.append(t)
-
-    ts = TableStateV2(None, _H(), _TV(), time_mode="EventTime")
-    with pytest.raises(RuntimeError, match="ProcessingTimeTimeout"):
-        ts.set_timeout_ms(5_000)
-    ts.set_timeout_timestamp_ms(42)  # correct domain: allowed
-
-    ts_p = TableStateV2(None, _H(), _TV(), time_mode="ProcessingTime")
-    with pytest.raises(RuntimeError, match="EventTimeTimeout"):
-        ts_p.set_timeout_timestamp_ms(42)
-    ts_p.set_timeout_ms(5_000)
