@@ -172,8 +172,9 @@ def shingle_arrays(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFra
     r15 plan note: a downstream ``explode(gs)`` makes
     InferFiltersFromGenerate add ``size(gs) > 0``, which pushdown
     inlines below this project — the plan then SHOWS the shingle
-    expression twice (nodes (7)/(8) of
-    plans/r15/doc_ngram_jaccard_capped_before.txt). Measured (r15,
+    expression twice: once in a Filter on ``size(array_distinct(
+    transform(sequence(...))))`` and again in the Project that feeds the
+    Generate. Measured (r15,
     interleaved same-session A/B on the registry capped-Jaccard query):
     the duplication is NOT paid at runtime — the HOF expression makes
     both operators run interpreted with runtime subexpression

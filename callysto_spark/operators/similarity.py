@@ -144,8 +144,8 @@ def _score_broadcast(c: DataFrame, q: DataFrame, round_ndigits: int | None, on: 
     (util.barrier_select, r15 optimization): the ``isNotNull`` guard
     otherwise pushes into the JOIN CONDITION with the whole rounded
     dot-product fold inlined — the 64-element fold evaluated up to 4×
-    in the join condition and 4× again in the projection per candidate
-    pair (plans/r15/emb_ivf_topk_before.txt nodes (10)/(11))."""
+    in the BroadcastHashJoin condition and 4× again in the Project
+    above it, per candidate pair (emb_ivf_topk before r15)."""
     from callysto_spark.operators.util import barrier_select
 
     joined = c.crossJoin(F.broadcast(q)) if on is None else c.join(F.broadcast(q), on)
@@ -461,8 +461,9 @@ def ivf_assign(
         # explode(array(...)) barrier (r15): consumed as an equi-join
         # key, the inferred isnotnull(cell) otherwise pushes below this
         # project with the whole k×dim argmin fold inlined — the
-        # assignment computed twice per corpus row
-        # (plans/r15/emb_ivf_topk_before.txt nodes (2)/(4))
+        # assignment computed twice per corpus row (before r15 the
+        # scan Filter and the Project after its Exchange both carried
+        # the array_min(transform(...)) argmin)
         return narrow.select(
             F.col(id_col),
             F.col(vec_col),
@@ -721,11 +722,10 @@ def probe_cells_for_queries(
     norm) would pick arbitrary probe cells and rank NaN sims FIRST —
     excluded instead, the same contract the distributed paths enforce.
 
-    Shared by the :func:`ivf_topk_stored` serve path AND the scaling
-    probe's scoring-volume measurement (scaling_bench.ivf_probe):
-    measurement and serving MUST share this rule — a separate copy that
-    drifts (different metric, tie-break, or a skipped cleanliness
-    filter) certifies a different algorithm than the one served.
+    The single rule the :func:`ivf_topk_stored` serve path uses: a
+    separate copy that drifts (different metric, tie-break, or a skipped
+    cleanliness filter) would certify a different algorithm than the one
+    served.
     """
     import math
 

@@ -106,9 +106,9 @@ def barrier_select(df: DataFrame, *keep, **named) -> DataFrame:
     ``valid_norm`` that re-evaluates the whole fold 4 extra times per
     row, and an IVF cell assignment consumed as a join key re-runs the
     k×dim argmin once per row in the inferred isnotnull filter
-    (measured in plans/r15/emb_ivf_topk_before.txt: Filter(2) carries
-    4× SQRT(aggregate(...)) + 1× array_min(...) that Project(4) then
-    computes again). Generate is a pushdown barrier — predicates
+    (measured on emb_ivf_topk before r15: the scan Filter carried
+    4× SQRT(aggregate(...)) + 1× array_min(...) that the next Project
+    computed again). Generate is a pushdown barrier — predicates
     referencing its output cannot move below it — so each named
     expression is evaluated exactly once per row and every downstream
     test sees a cheap attribute. The 1-element explode itself is a

@@ -102,7 +102,7 @@ def load_all() -> dict[str, Query]:
     q5_supplier_volume (a bench=True row that the r14 promoted list
     did not cover), the r14 ADVICE high finding. r15 (THIS round)
     promotes ALL 37 rows whose newest green record is r13 — the r13
-    window (CORRECTNESS_r13.json) minus the 13-slot kept head:
+    window (history/CORRECTNESS_r13.json) minus the 13-slot kept head:
     streaming/serde, events windows, grouping-sets/cube/rollup/
     pivot, joins/set-ops, string/null/array/map funcs, fingerprint/
     winnowing, and q5/q6 — and the watch list is now DERIVED
@@ -113,9 +113,9 @@ def load_all() -> dict[str, Query]:
     ``tests/test_oracle.py::test_all_bench_rows_in_sampled_window``.
     No registry row's semantics change in r15 (registry frozen at
     87). r16 (THIS round) promotes ALL 37 rows whose newest green
-    record is r14 (the r14 promoted list = PERF_r15's rotation
-    complement): TPC-H tail, scalar-subquery/setop/argmax/window-
-    frame/histogram family, text-analysis, near-dup pair/survivor,
+    record is r14 (the r14 promoted list = the rotation complement in
+    history/PERF_r15.json): TPC-H tail, scalar-subquery/setop/argmax/
+    window-frame/histogram family, text-analysis, near-dup pair/survivor,
     BLAS ANN, MinHash/LSH, SimHash, ivf_assign — exactly covering
     the 9 queries the r15 optimization restructured that fell
     outside the r15 driver window (the r15 VERDICT item 2). That
@@ -189,7 +189,7 @@ def load_all() -> dict[str, Query]:
     covered = set(promoted) | set(llm_kept)
     watch = [n for n, q in REGISTRY.items() if q.bench and n not in covered]
     # r17 promotion queue: the 37 rows whose newest green record is
-    # r15 — the r15 promoted window (CORRECTNESS_r15.json) plus
+    # r15 — the r15 promoted window (history/CORRECTNESS_r15.json) plus
     # doc_dedup_exact (deferred from this round's head, newest green
     # r15); the r17 window then drops back to the 6-row llm_kept head
     # once the bench-row arithmetic allows.

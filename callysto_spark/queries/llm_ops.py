@@ -996,9 +996,8 @@ def doc_pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The two FILTERED expressions ride the barrier_select Generate
     # barrier (r15): the quality/length filter otherwise pushes below
     # the scoring project with the defining expressions inlined per
-    # conjunct — the token-count regex scan ran 3× in the filter + 1×
-    # in the projection per row
-    # (plans/r15/doc_pipeline_clean_corpus_before.txt nodes (2)/(3)).
+    # conjunct — the token-count regexp_extract_all scan ran 3× in the
+    # scan Filter + 1× in the Project above it, per row.
     # The sha256 fingerprint deliberately stays OUT of the barrier and
     # is projected after the filter: survivors-only, not every row.
     scored = barrier_select(

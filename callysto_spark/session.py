@@ -1,6 +1,7 @@
 """SparkSession factory with scale-aware defaults.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32); the same
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the cores
+this process may run on, ``os.sched_getaffinity``); the same
 config block is what we would ship to a 1000-executor cluster — AQE on
 (runtime coalescing + skew-join splitting), UTC session time, Arrow for
 the Python boundary, and shuffle partitions sized to the parallelism at
@@ -25,7 +26,7 @@ def get_spark(
     On a real cluster ``master`` comes from spark-submit; locally we run
     ``local[N]``. Every conf here is also correct for cluster mode.
     """
-    cpus = int(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(cpus or os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.master(master)

@@ -12,6 +12,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 
 import bench_compare  # noqa: E402
 
+# archived bench records (round artifacts and frozen same-code pairs)
+HISTORY = Path(__file__).resolve().parents[1] / "history"
+
 
 def _art(queries, canary=None, **extra):
     art = {"metric": "headline_queries_total", "unit": "sec",
@@ -150,8 +153,8 @@ def test_gate_passes_on_real_same_code_artifacts():
     # rotates to each round's final code and is no longer same-code
     # with BENCH_r08) vs BENCH_r08.json (driver artifact of the SAME
     # code) must pass the standing gate.
-    root = Path(__file__).resolve().parents[1]
-    old = Path(__file__).parent / "fixtures" / "BENCH_ANCHOR_r8_same_code.json"
+    root = HISTORY
+    old = root / "BENCH_ANCHOR_r8_same_code.json"
     new = root / "BENCH_r08.json"
     if not (old.exists() and new.exists()):
         import pytest
@@ -295,7 +298,7 @@ def test_committed_artifact_pair_corroborates_and_gates_norm_alone():
 
     import pytest
 
-    root = Path(__file__).resolve().parents[1]
+    root = HISTORY
     anchor = root / "BENCH_BASELINE.json"
     # numeric round sort: lexicographic max picks BENCH_r99 over
     # BENCH_r100 at three digits, silently testing a stale artifact;
@@ -468,7 +471,7 @@ def test_bench_flagged_registry_rows_match_anchor_queries():
     row forces an anchor refresh in the same change."""
     from callysto_spark.queries import load_all
 
-    root = Path(__file__).resolve().parents[1]
+    root = HISTORY
     anchor = root / "BENCH_BASELINE.json"
     if not anchor.exists():
         import pytest
@@ -649,7 +652,7 @@ def test_archived_same_code_selfpair_two_band_exceedances_stay_watch():
     supplier_daily_running 1.36x simultaneously while the TOTAL got
     FASTER (0.91x). Count-alone escalation would gate a same-code
     pair; the scaled total bar must leave both as WATCH."""
-    fx = Path(__file__).parent / "fixtures"
+    fx = HISTORY
     s1 = bench_compare.load(str(fx / "bench_r13_selfpair_a.json"))
     s3 = bench_compare.load(str(fx / "bench_r13_selfpair_b.json"))
     lines, worse, errors, watch = bench_compare.compare(s3, s1, threshold=1.25)
@@ -668,14 +671,14 @@ def test_archived_same_code_selfpair_documents_the_jit_envelope():
     anchor's draws (refresh anchors from mid-range windows, never from
     the fastest window of a session — BENCH_BASELINE's emb_cosine_topk
     is a mid/slow draw at 0.442s, which is why live rounds pass)."""
-    fx = Path(__file__).parent / "fixtures"
+    fx = HISTORY
     s1 = bench_compare.load(str(fx / "bench_r13_selfpair_a.json"))
     s3 = bench_compare.load(str(fx / "bench_r13_selfpair_b.json"))
     _, worse, errors, _ = bench_compare.compare(s1, s3, threshold=1.25)
     assert not errors
     assert "emb_cosine_topk" in worse  # 1.79x > hard_br on same code
     # both windows individually gate clean against the committed anchor
-    root = Path(__file__).resolve().parents[1]
+    root = HISTORY
     anchor = root / "BENCH_BASELINE.json"
     if anchor.exists():
         a = bench_compare.load(str(anchor))
@@ -736,7 +739,7 @@ def test_committed_sf1_anchor_pair_gates_clean():
     must carry its provenance + measured envelope."""
     import pytest
 
-    root = Path(__file__).resolve().parents[1]
+    root = HISTORY
     anchor = root / "BENCH_SF1_BASELINE.json"
     corr = root / "BENCH_SF1_SELF_r14.json"
     if not (anchor.exists() and corr.exists()):
@@ -863,8 +866,8 @@ def test_mint_anchor_refuses_archived_fast_draw_window():
     committed anchor reads 0.442s — an anchor minted from it would read
     future same-code runs at up to 1.79x and gate-fail them. The mint
     must refuse it as a single-window candidate."""
-    fx = Path(__file__).parent / "fixtures"
-    root = Path(__file__).resolve().parents[1]
+    fx = HISTORY
+    root = HISTORY
     fast = bench_compare.load(str(fx / "bench_r13_selfpair_a.json"))
     anchor = bench_compare.load(str(root / "BENCH_BASELINE.json"))
     minted, msgs = bench_compare.mint_anchor([fast], current=anchor)
@@ -953,7 +956,7 @@ def test_archived_r14_selfpair_gates_clean_and_ledger_does_not_false_fire():
     discrimination the slow-creep ledger is built on: pairwise band
     membership alone (lottery) does not escalate; only band membership
     on top of a prior-round anchor-relative flag (creep) does."""
-    fx = Path(__file__).parent / "fixtures"
+    fx = HISTORY
     a = bench_compare.load(str(fx / "bench_r14_selfpair_a.json"))
     b = bench_compare.load(str(fx / "bench_r14_selfpair_b.json"))
     assert a.get("watch_ledger") == [] and b.get("watch_ledger") == []
@@ -980,7 +983,7 @@ def test_committed_r15_ledger_pins_next_round_creep_decision():
     live artifact: a window where q5 recovers passes un-escalated
     (lottery dissolves), a window where q5 sits in the band again
     gates as slow-creep. The sf1 artifact's ledger is pinned empty."""
-    root = Path(__file__).resolve().parents[1]
+    root = HISTORY
     art_path = root / "BENCH_DETAIL_self_r15.json"
     if not art_path.exists():
         pytest.skip("r15 self artifact not present in this checkout")

@@ -1,7 +1,7 @@
-"""The bench must never lose a round's signal to one broken query
-(round 3 shipped rc=1 with zero numbers). Runs bench.py as the driver
-does, with one query's failure injected, and asserts the JSON line
-still arrives with every other timing."""
+"""The bench must never lose a run's signal to one broken query
+(round 3 shipped rc=1 with zero numbers). Runs bench.py with one
+query's failure injected and a small ingest drain, and asserts the JSON
+line still arrives with every other timing and the ingest figure."""
 
 from __future__ import annotations
 
@@ -10,99 +10,48 @@ import os
 import subprocess
 import sys
 
-
-
 import pytest
 
-pytestmark = pytest.mark.slow  # gated: see pytest.ini / conftest (r16 verify-budget fix)
+pytestmark = pytest.mark.slow  # gated: see pytest.ini / conftest
 
-def test_bench_survives_single_query_failure(tmp_path):
-    detail = tmp_path / "BENCH_DETAIL.json"
+# the bench's headline contract: these keys are always on the line
+CONTRACT_KEYS = {"metric", "value", "unit", "queries", "sf", "ingest_mbps"}
+
+
+def test_bench_survives_single_query_failure(sf_dir):
     env = dict(
         os.environ,
-        SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
-        SPARK_GRAFT_CPUS="8",
+        SPARK_GRAFT_SF_DIR=sf_dir,
         SPARK_GRAFT_BENCH_RUNS="1",
-        SPARK_GRAFT_INGEST_MSGS="0",
+        SPARK_GRAFT_INGEST_MSGS="640",
         SPARK_GRAFT_BENCH_FAIL="q3_shipping_priority",
-        SPARK_GRAFT_BENCH_DETAIL=str(detail),
-        # keep this test about FAILURE isolation, not machine load: the
-        # suite itself loads the box, so disarm the admission gate here
-        SPARK_GRAFT_LOAD_MAX="1e9",
     )
     proc = subprocess.run(
         [sys.executable, "bench.py"],
         capture_output=True,
         text=True,
-        # a clean run takes ~5 min on a quiet host; leave headroom for a
-        # loaded one (the r15 full-suite run hit 420s and flaked)
+        # a loaded host slows the subprocess drive well past its quiet
+        # few minutes (a full-suite run once hit 420s and flaked)
         timeout=900,
         env=env,
         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
-    line = [l for l in proc.stdout.splitlines() if l.startswith("{")][-1]
+    line = proc.stdout.splitlines()[-1]
     out = json.loads(line)
+    assert CONTRACT_KEYS <= set(out), sorted(out)
     assert out["queries"]["q3_shipping_priority"] is None
-    assert "q3_shipping_priority" in out["errors"]
     others = {k: v for k, v in out["queries"].items() if k != "q3_shipping_priority"}
     assert others and all(isinstance(v, float) for v in others.values()), others
     assert out["value"] > 0
-    # a partial round must self-identify: its total sums only surviving
-    # queries and is NOT comparable to a clean round's total
+    # a partial run must self-identify: its total sums only surviving
+    # queries and is NOT comparable to a complete run's total
     assert out["partial"] is True
     assert out["n_failed"] == 1
-    # the clean (disarmed-gate) path records the gate sample and does
-    # NOT carry the contamination flag
-    assert "loadavg_at_gate" in out
-    assert "load_contaminated" not in out
-    # the host-speed reference rides every artifact: cross-round query
-    # deltas are divided by the canary ratio before being called
-    # regressions (the shared host's clock swings ~2x within a session)
-    assert 0.01 < out["cpu_canary_s"] < 10, out["cpu_canary_s"]
-    # ... sampled again after the timed sections: a large start/end gap
-    # is mid-run host drift, the thing that contaminates ingest spread
-    assert 0.01 < out["cpu_canary_end_s"] < 10, out["cpu_canary_end_s"]
-    # driver-capture bound (r12): the final stdout line must fit the
-    # ~2 KB tail window that lost BENCH_r11, and the diagnostics the
-    # slimming removed must land in the sidecar, full error text
-    # included
-    assert line == proc.stdout.splitlines()[-1], "headline must be the LAST stdout line"
+    # the line carries the exception type; the full text is on stderr
+    assert out["errors"] == {"q3_shipping_priority": "RuntimeError"}
+    assert "injected failure (SPARK_GRAFT_BENCH_FAIL)" in proc.stderr
+    assert out["ingest_mbps"] > 0
+    # a log collector that keeps only the last ~2 KB of stdout must
+    # still capture the whole line
     assert len(line) < 1800, len(line)
-    side = json.loads(detail.read_text())
-    assert "warm_runs" in side and "query_session_won" in side
-    assert side["errors"]["q3_shipping_priority"].startswith("RuntimeError")
-
-
-def test_bench_flags_load_contaminated_run(tmp_path):
-    """BENCH_r06.json was committed at loadavg 11.2 — a load artifact a
-    reader could mistake for a regression. The admission gate must make
-    that impossible: with an unsatisfiable load ceiling and a zero retry
-    budget, the bench still emits its JSON line (a flagged number beats
-    no number) but marks it load_contaminated and exits 2 so the round
-    artifact's rc shows the contamination."""
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
-        SPARK_GRAFT_CPUS="8",
-        SPARK_GRAFT_BENCH_RUNS="1",
-        SPARK_GRAFT_INGEST_MSGS="0",
-        SPARK_GRAFT_BENCH_DETAIL=str(tmp_path / "BENCH_DETAIL.json"),
-        SPARK_GRAFT_LOAD_MAX="-1",  # loadavg >= 0 > -1 always: forced contamination
-        SPARK_GRAFT_LOAD_RETRIES="2",
-        SPARK_GRAFT_LOAD_WAIT="0",
-    )
-    proc = subprocess.run(
-        [sys.executable, "bench.py"],
-        capture_output=True,
-        text=True,
-        timeout=900,  # see test_bench_survives_single_query_failure
-        env=env,
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    )
-    assert proc.returncode == 2, (proc.returncode, proc.stderr[-2000:])
-    line = [l for l in proc.stdout.splitlines() if l.startswith("{")][-1]
-    out = json.loads(line)
-    assert out["load_contaminated"] is True
-    assert out["value"] > 0  # the numbers are still there, just flagged
-    assert "load gate" in proc.stderr

@@ -3,8 +3,9 @@
 Once an A/B decides between two implementations, the loser is deleted
 along with the env switch that selected it, and the one-off script that
 measured it goes too. This test pins the engine's complete set of
-environment reads, so a new switch has to be added here on purpose, and
-it fails on any round-stamped script left under ``tools/``.
+environment reads and ``bench.py``'s, so a new switch has to be added
+here on purpose, and it fails on any round-stamped script left under
+``tools/``.
 """
 
 from __future__ import annotations
@@ -15,6 +16,13 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 
 ENGINE_ENV_VARS = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM", "CALLYSTO_WEB_PORT"}
+# the core count comes from get_spark, not from a bench-local default
+BENCH_ENV_VARS = {
+    "SPARK_GRAFT_SF_DIR",
+    "SPARK_GRAFT_BENCH_RUNS",
+    "SPARK_GRAFT_INGEST_MSGS",
+    "SPARK_GRAFT_BENCH_FAIL",
+}
 
 
 def _is_os_environ(node: ast.AST) -> bool:
@@ -64,3 +72,8 @@ def test_no_dead_env_switches_or_round_stamped_tools():
     )
     stamped = sorted(p.name for p in (ROOT / "tools").glob("*_r[0-9]*.py"))
     assert not stamped, f"round-stamped one-off scripts left in tools/: {stamped}"
+
+
+def test_bench_env_reads_are_pinned():
+    tree = ast.parse((ROOT / "bench.py").read_text(encoding="utf-8"))
+    assert _env_reads(tree) == BENCH_ENV_VARS

@@ -189,17 +189,16 @@ def test_load_all_idempotent_and_windowed():
     ]
     assert not missing, f"north-star queries fell out of the sampled window: {missing}"
     # the freshness justification for the deferral, checked against the
-    # actual newest driver artifact when present
-    art = Path(__file__).resolve().parents[1] / "CORRECTNESS_r15.json"
-    if art.exists():
-        rec = json.loads(art.read_text())
-        rec = rec.get("parsed", rec)
-        not_fresh = [
-            n for n in deferred if not (rec.get(n, {}).get("hash_match") or rec.get(n, {}).get("rows_match"))
-        ]
-        assert not not_fresh, (
-            f"deferred rows must be green in the newest driver artifact: {not_fresh}"
-        )
+    # newest correctness artifact (a missing artifact fails the test)
+    art = Path(__file__).resolve().parents[1] / "history" / "CORRECTNESS_r15.json"
+    rec = json.loads(art.read_text())
+    rec = rec.get("parsed", rec)
+    not_fresh = [
+        n for n in deferred if not (rec.get(n, {}).get("hash_match") or rec.get(n, {}).get("rows_match"))
+    ]
+    assert not not_fresh, (
+        f"deferred rows must be green in the newest driver artifact: {not_fresh}"
+    )
 
 
 def test_all_bench_rows_in_sampled_window():

@@ -4,6 +4,9 @@ same code to be efficient at 100 TB (SURVEY.md 'optimize for scale').
 
 from __future__ import annotations
 
+import difflib
+from pathlib import Path
+
 import pytest
 
 from callysto_spark.plans import (
@@ -13,8 +16,12 @@ from callysto_spark.plans import (
     pushed_filters,
 )
 from callysto_spark.queries import load_all
+from tools.opt_measure import plan_summary
 
 REGISTRY = load_all()
+# One plan-shape summary line per registry query at sf0.001; regenerate
+# with `tools/opt_measure.py plans --all` when a plan change is intended.
+PLAN_LEDGER = Path(__file__).with_name("plan_ledger.txt")
 
 
 def q(name, spark, sf_dir):
@@ -97,12 +104,16 @@ def test_registry_wide_plan_sweep(spark, sf_dir):
     """Every registered query, every round: no CartesianProduct
     anywhere, and broadcast nested-loop joins only where a tiny
     broadcast side is the intended plan. Catches scale-killer
-    regressions in queries that have no dedicated plan test."""
-    failures = []
-    for name in sorted(REGISTRY):
-        from callysto_spark.plans import physical_plan
+    regressions in queries that have no dedicated plan test. Every
+    plan's shape summary must also match the committed ledger, so any
+    plan change shows up as a reviewed ledger diff."""
+    from callysto_spark.plans import physical_plan
 
+    failures = []
+    summaries = []
+    for name in sorted(REGISTRY):
         plan = physical_plan(REGISTRY[name].fn(spark, sf_dir))
+        summaries.append(f"{name}: {plan_summary(plan)}")
         if "CartesianProduct" in plan:
             failures.append(f"{name}: CartesianProduct")
         if "BroadcastNestedLoopJoin" in plan and name not in BNLJ_ALLOWED:
@@ -115,6 +126,12 @@ def test_registry_wide_plan_sweep(spark, sf_dir):
         if "BatchEvalPython" in plan:
             failures.append(f"{name}: row-at-a-time Python UDF (BatchEvalPython)")
     assert not failures, failures
+    diff = difflib.unified_diff(
+        PLAN_LEDGER.read_text().splitlines(), summaries,
+        "tests/plan_ledger.txt", "current plans", n=0, lineterm="",
+    )
+    changed = "\n".join(diff)
+    assert not changed, f"plan shapes differ from the ledger:\n{changed}"
 
 
 def test_scan_read_schemas_handles_nested_types(spark, sf_dir):

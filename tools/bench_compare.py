@@ -1,6 +1,11 @@
 #!/usr/bin/env python
 """Compare two BENCH_r*.json artifacts with host-speed normalization.
 
+Historical: this reads the archived round records in ``history/``.
+Today's ``bench.py`` no longer writes the canary, bracket and ledger
+fields described below, and parent-vs-change ``perfbench/run.py`` runs
+are the A/B harness.
+
 The shared host's effective clock drifts run-to-run (COVERAGE.md, "r7
 bench measurement story"): every query can read 1.3-1.9x slower with a
 clean load gate and 0% steal simply because the box itself is slow that
@@ -125,7 +130,7 @@ import sys
 # a total only ~1.07x and previously escaped both the per-query and
 # total bars entirely. COUNTING ALONE is not a same-code
 # discriminator: the archived r13 same-code pair
-# (tests/fixtures/bench_r13_selfpair_*.json — two clean admitted
+# (history/bench_r13_selfpair_*.json — two clean admitted
 # windows, flat corroborated canaries, engine identical) produced 2-3
 # simultaneous band exceedances in one direction and a 1.79x
 # single-query draw (emb_cosine_topk 0.278s -> 0.493s, two-session
@@ -647,7 +652,7 @@ def mint_anchor(
 
     The failure mode this mechanizes out of existence: refreshing the
     anchor from a session whose JIT lottery came up fast. The archived
-    same-code pair (tests/fixtures/bench_r13_selfpair_a.json) drew
+    same-code pair (history/bench_r13_selfpair_a.json) drew
     emb_cosine_topk at 0.278s where the standing anchor reads 0.442s —
     an anchor minted from that window would read FUTURE same-code runs
     at up to 1.79x normalized and gate-fail them. Until r14 the only

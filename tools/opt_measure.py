@@ -1,17 +1,14 @@
 #!/usr/bin/env python
-"""Optimization-round measurement harness (guide §1: measure first).
+"""Plan-shape summaries for registry queries.
 
-Two subcommands:
+``plans [--all] [names...]`` prints one ``name: summary`` line per query
+(default: the bench headline set): Exchange count, join strategies,
+Python-eval nodes and PushedFilters, read from ``explain("formatted")``.
+The ``--all`` output with ``SPARK_GRAFT_SF_DIR`` set to the sf0.001
+test corpus is the committed ledger ``tests/plan_ledger.txt``, which
+``tests/test_plans.py`` checks::
 
-- ``plans [--out DIR] [names...]``: dump ``explain("formatted")`` for the
-  named registry queries (default: the bench headline set) to
-  ``DIR/<name>.txt`` plus a one-line plan-shape summary (Exchange count,
-  join strategies, Python-eval nodes, PushedFilters) to stdout.
-- ``time [--runs N] [--warms W] [names...]``: per-query timed min-of-N
-  against the noop sink (bench.py's convention) after W warm runs, with
-  the same clearCache + transient-release discipline as bench.py. This
-  is the quick A/B loop for the optimization round — the committed
-  artifact numbers still come from bench.py itself.
+    python tools/opt_measure.py plans --all > tests/plan_ledger.txt
 """
 
 from __future__ import annotations
@@ -21,7 +18,6 @@ import io
 import os
 import re
 import sys
-import time
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -53,17 +49,12 @@ def plan_summary(text: str) -> str:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("cmd", choices=["plans", "time"])
+    ap.add_argument("cmd", choices=["plans"])
     ap.add_argument("names", nargs="*")
-    ap.add_argument("--out", default="plans/r15")
-    ap.add_argument("--runs", type=int, default=7)
-    ap.add_argument("--warms", type=int, default=6)
-    ap.add_argument("--suffix", default="")
     ap.add_argument("--all", action="store_true")
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     registry = load_all()
     if args.names:
         names = args.names
@@ -71,56 +62,9 @@ def main() -> None:
         names = sorted(registry)
     else:
         names = [n for n, q in sorted(registry.items()) if q.bench]
-    spark = get_spark("callysto-opt-measure", cpus=cpus)
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-
-    if args.cmd == "plans":
-        os.makedirs(args.out, exist_ok=True)
-        for name in names:
-            df = registry[name].fn(spark, sf_dir)
-            text = plan_text(df)
-            path = os.path.join(args.out, f"{name}{args.suffix}.txt")
-            with open(path, "w") as f:
-                f.write(text)
-            print(f"{name}: {plan_summary(text)}")
-        return
-
-    def run(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    import gc
-
-    def settle() -> None:
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(0.4)
-
-    # global warm pass (bench.py discipline: session-global JIT storm
-    # lands before any timed region)
+    spark = get_spark("callysto-opt-measure")
     for name in names:
-        try:
-            run(registry[name].fn(spark, sf_dir))
-        except Exception as exc:
-            print(f"# warm {name} FAILED: {exc}", file=sys.stderr)
-        spark.catalog.clearCache()
-    results: dict[str, float] = {}
-    for name in names:
-        spark.sparkContext.setJobDescription(f"opt_measure: {name}")
-        for _ in range(args.warms):
-            run(registry[name].fn(spark, sf_dir))
-            spark.catalog.clearCache()
-        settle()
-        best = float("inf")
-        for _ in range(args.runs):
-            t0 = time.perf_counter()
-            run(registry[name].fn(spark, sf_dir))
-            best = min(best, time.perf_counter() - t0)
-            spark.catalog.clearCache()
-        results[name] = round(best, 3)
-        print(f"{name}: {best:.3f}s (min of {args.runs})")
-        settle()
-    total = round(sum(results.values()), 3)
-    print(f"TOTAL: {total}s over {len(results)} queries")
+        print(f"{name}: {plan_summary(plan_text(registry[name].fn(spark, sf_dir)))}")
 
 
 if __name__ == "__main__":
