@@ -1,7 +1,8 @@
 """SparkSession factory with scale-aware defaults.
 
 Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the cores
-this process may run on, ``os.sched_getaffinity``); the same
+this process may run on, ``os.sched_getaffinity``) with a driver heap of
+``$SPARK_GRAFT_DRIVER_MEM`` (default: half the host's RAM); the same
 config block is what we would ship to a 1000-executor cluster — AQE on
 (runtime coalescing + skew-join splitting), UTC session time, Arrow for
 the Python boundary, and shuffle partitions sized to the parallelism at
@@ -11,8 +12,22 @@ hand rather than the 200 default.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+MEMINFO = "/proc/meminfo"
+# the directory that holds the ``callysto_spark`` package
+ENGINE_ROOT = str(Path(__file__).resolve().parents[1])
+
+
+def _half_host_memory() -> str:
+    """Half of the host's RAM (``MemTotal``), at least 1g, as a heap size."""
+    with open(MEMINFO) as fh:
+        for line in fh:
+            if line.startswith("MemTotal:"):
+                return f"{max(int(line.split()[1]) // 2048, 1024)}m"
+    raise RuntimeError(f"no MemTotal line in {MEMINFO}")
 
 
 def get_spark(
@@ -58,7 +73,16 @@ def get_spark(
         .config("spark.sql.optimizer.windowGroupLimitThreshold", str(64 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _half_host_memory(),
+        )
+        # Fork Python workers from the engine's daemon, which stops every
+        # task re-reading pyspark.zip (runtime/pydaemon.py). Spark starts
+        # it with ``python -m``, so the workers' path must hold the engine
+        # even when the driver found it through its own sys.path.
+        .config("spark.python.daemon.module", "callysto_spark.runtime.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", ENGINE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

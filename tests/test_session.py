@@ -44,3 +44,32 @@ def test_default_cores_are_the_affinity_count(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
     session.get_spark("override")
     assert builder.masters[-1] == "local[5]"
+
+
+def test_python_workers_fork_from_the_engine_daemon(monkeypatch):
+    builder = _FakeBuilder()
+    monkeypatch.setattr(session.SparkSession, "builder", builder)
+    session.get_spark("daemon")
+    assert builder.conf["spark.python.daemon.module"] == "callysto_spark.runtime.pydaemon"
+    # the daemon is started with ``python -m``, from the workers' path
+    assert builder.conf["spark.executorEnv.PYTHONPATH"] == session.ENGINE_ROOT
+    assert (session.Path(session.ENGINE_ROOT) / "callysto_spark/runtime/pydaemon.py").is_file()
+
+
+def test_default_heap_is_half_the_host_memory(monkeypatch, tmp_path):
+    builder = _FakeBuilder()
+    monkeypatch.setattr(session.SparkSession, "builder", builder)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    meminfo = tmp_path / "meminfo"
+    monkeypatch.setattr(session, "MEMINFO", str(meminfo))
+    meminfo.write_text("MemTotal:        4194304 kB\nMemFree:         1000000 kB\n")
+    session.get_spark("4g-host")
+    assert builder.conf["spark.driver.memory"] == "2048m"
+    # never below 1g
+    meminfo.write_text("MemTotal:         786432 kB\n")
+    session.get_spark("tiny-host")
+    assert builder.conf["spark.driver.memory"] == "1024m"
+    # the env variable stays the override
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    session.get_spark("override")
+    assert builder.conf["spark.driver.memory"] == "3g"
