@@ -49,68 +49,14 @@ def _as_foreach_batch(sink: Callable) -> Callable[[DataFrame, int], None]:
     ``f(df, batch_id)`` writers (the exactly-once wrappers in
     sinks/exactly_once.py NEED the batch id — it is their replay-dedup
     key, so dropping it would silently void the idempotency contract).
-    Inspect once at wiring time, not per batch."""
+    Inspect once at wiring time, not per batch. A sink whose signature
+    ``inspect`` cannot read is called as Spark's own ``f(df, batch_id)``."""
     import inspect
 
     try:
         params = list(inspect.signature(sink).parameters.values())
     except (TypeError, ValueError):  # builtins/C-callables without signatures
-        # Arity unknown — PREFER the 2-arg form (dropping batch_id from
-        # an exactly-once wrapper would silently void its replay-dedup
-        # contract) and fall back to 1-arg on the first BIND failure,
-        # then lock whichever arity worked. Two conditions BOTH required
-        # to call it a bind failure: (a) no deeper traceback frame (the
-        # call never entered Python code), AND (b) the message reads
-        # like CPython's argument-count complaints ("takes exactly 1
-        # argument (2 given)", "no positional arguments", ...). (a)
-        # alone is not enough: a C-IMPLEMENTED sink raising TypeError
-        # internally also adds no Python frame, and retrying it with 1
-        # arg would re-execute its side effects within one batch.
-        # Residual risk (documented): a C sink whose internal TypeError
-        # ALSO matches the argument-count wording is indistinguishable
-        # from a bind failure and may be invoked twice on the first
-        # batch — pass a Python wrapper (or anything inspectable by
-        # inspect.signature) to get exact wiring-time arity instead.
-        import re as _re
-
-        # Every branch requires explicit argument-COUNT wording: a bare
-        # "takes " or "expected at" prefix also matches unrelated C-sink
-        # internals ("expected attributes dict", "takes time"), and a
-        # false positive here re-invokes the sink — re-executing its
-        # side effects within one batch. Covers CPython's arity forms:
-        # "takes {N|no|exactly one|at most N} [positional] argument(s)",
-        # "takes from N to M positional arguments", argument-clinic
-        # "expected at most N arguments", and the "(N given)" suffix.
-        _bindish = _re.compile(
-            r"takes (?:exactly |at most |at least )?(?:no |one |two |\d+ )"
-            r"(?:positional )?arguments?"
-            r"|takes from \d+ to \d+ (?:positional )?arguments?"
-            r"|expected at most \d+ arguments?"
-            r"|arguments? \(\d+ given\)"
-        )
-        state = {"arity": None}
-
-        def adaptive(b: DataFrame, i: int) -> None:
-            if state["arity"] == 2:
-                return sink(b, i)
-            if state["arity"] == 1:
-                return sink(b)
-            try:
-                out = sink(b, i)
-            except TypeError as exc:
-                raised_inside = (
-                    exc.__traceback__ is not None
-                    and exc.__traceback__.tb_next is not None
-                )
-                if raised_inside or not _bindish.search(str(exc)):
-                    raise  # the sink's own error, not an arity mismatch
-                out = sink(b)
-                state["arity"] = 1
-            else:
-                state["arity"] = 2
-            return out
-
-        return adaptive
+        return sink
     positional = [
         p for p in params
         if p.kind in (p.POSITIONAL_ONLY, p.POSITIONAL_OR_KEYWORD)

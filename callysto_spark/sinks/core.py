@@ -109,59 +109,37 @@ class KafkaSink(Sink):
 class MemTopicSink(Sink):
     """Keyed produce to the jar-free memtopic transport (the runnable
     twin of :class:`KafkaSink`; reference `kafka/cproducer.rs:24-58`).
-    Routes by crc32(key) % partitions on the EXECUTORS (foreachPartition
-    — rows never funnel through the driver), appending to the topic's
-    partition logs. Needs `value` (and optionally `key`) columns, same
-    contract as the Kafka writer."""
+    Writes through the memtopic DataSource writer, which routes by
+    crc32(key) % partitions on the EXECUTORS (rows never funnel through
+    the driver) in bounded chunks. Needs `value` (and optionally `key`)
+    columns, same contract as the Kafka writer."""
 
     topic: str
     broker_dir: str
     n_partitions: int = 4
-    flush_rows: int = 10_000
 
     def write(self, df: DataFrame, batch_id: int = 0) -> None:
-        topic, broker_dir, n_parts = self.topic, self.broker_dir, self.n_partitions
-        flush_rows = self.flush_rows
+        from callysto_spark.sources.memtopic import register
+
         cols = [F.col("value").cast("string").alias("value")]
-        has_key = "key" in df.columns
-        if has_key:
+        if "key" in df.columns:
             cols.insert(0, F.col("key").cast("string").alias("key"))
         # honor an explicit `partition` column exactly like the Kafka
         # writer does — the twin dropping it would let key-hash routing
         # pass tests and then diverge (different partitions, broken
         # per-partition ordering) against real Kafka in production
-        has_part = "partition" in df.columns
-        if has_part:
+        if "partition" in df.columns:
             cols.append(F.col("partition").cast("int").alias("partition"))
-
-        def produce_partition(rows) -> None:
-            from callysto_spark.sources.memtopic import produce
-
-            # flush in bounded chunks (the JdbcSink batchsize /
-            # ElasticsearchSink bulk_size pattern): a skewed Spark
-            # partition must not materialize as one giant Python list.
-            # `sent` carries the running row index across chunks so the
-            # keyless round-robin fallback doesn't reset to partition 0
-            # at every flush boundary (r7 ADVICE: flush_rows %
-            # n_partitions != 0 skewed the keyless distribution).
-            buf: list[tuple] = []
-            sent = 0
-            for r in rows:
-                buf.append(
-                    (
-                        r["key"] if has_key else None,
-                        r["value"],
-                        r["partition"] if has_part else None,
-                    )
-                )
-                if len(buf) >= flush_rows:
-                    produce(broker_dir, topic, buf, n_parts, base_index=sent)
-                    sent += len(buf)
-                    buf = []
-            if buf:
-                produce(broker_dir, topic, buf, n_parts, base_index=sent)
-
-        df.select(*cols).foreachPartition(produce_partition)
+        register(df.sparkSession)
+        (
+            df.select(*cols)
+            .write.format("memtopic")
+            .mode("append")
+            .option("brokerDir", self.broker_dir)
+            .option("topic", self.topic)
+            .option("partitions", str(self.n_partitions))
+            .save()
+        )
 
 
 @dataclass

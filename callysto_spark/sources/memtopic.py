@@ -51,6 +51,9 @@ from pyspark.sql.types import StructType
 
 SCHEMA_DDL = "key string, value string, topic string, partition int, offset long, timestamp double"
 
+# Rows a write task buffers before each produce() call.
+PRODUCE_CHUNK_ROWS = 10_000
+
 
 def _topic_dir(broker_dir: str, topic: str) -> str:
     return os.path.join(broker_dir, topic)
@@ -87,7 +90,7 @@ def produce(
     ``base_index`` offsets the keyless round-robin fallback: a caller
     flushing one logical stream in chunks passes its running row count
     so round-robin continues across chunk boundaries instead of
-    restarting at partition 0 each flush (r7 ADVICE)."""
+    restarting at partition 0 each flush."""
     os.makedirs(_topic_dir(broker_dir, topic), exist_ok=True)
     by_pid: dict[int, list[str]] = {}
     for i, msg in enumerate(messages, start=base_index):
@@ -353,23 +356,32 @@ class _Produced(WriterCommitMessage):
 
 class _MemTopicWriterBase:
     """Executor-side keyed produce: each task routes its rows by key and
-    appends to the partition logs (flock-serialized). Requires `key` and
-    `value` columns (cast upstream), like the Kafka sink."""
+    appends to the partition logs (flock-serialized). Requires a `value`
+    column and takes optional `key` and `partition` columns (cast
+    upstream), like the Kafka sink."""
 
     def __init__(self, options: dict[str, str]) -> None:
         self.o = _Opts(options)
 
     def write(self, iterator) -> WriterCommitMessage:
-        msgs = []
+        # flush in bounded chunks (the JdbcSink batchsize /
+        # ElasticsearchSink bulk_size pattern): a skewed Spark partition
+        # must not materialize as one giant Python list. `sent` carries
+        # the running row index across chunks so the keyless round-robin
+        # fallback continues instead of restarting at partition 0 at
+        # every flush boundary.
+        buf: list[tuple] = []
+        sent = 0
         for row in iterator:
             d = row.asDict() if hasattr(row, "asDict") else dict(row)
             # honor an explicit `partition` column like the Kafka writer
-            # and the foreachBatch sink (sinks/core.py) — dropping it
-            # here would silently key-route rows this stream-writer
-            # path's twin contract promises to pin
-            msgs.append((d.get("key"), d["value"], d.get("partition")))
-        if msgs:
-            produce(self.o.broker_dir, self.o.topic, msgs, self.o.n_partitions)
+            buf.append((d.get("key"), d["value"], d.get("partition")))
+            if len(buf) >= PRODUCE_CHUNK_ROWS:
+                produce(self.o.broker_dir, self.o.topic, buf, self.o.n_partitions, base_index=sent)
+                sent += len(buf)
+                buf = []
+        if buf:
+            produce(self.o.broker_dir, self.o.topic, buf, self.o.n_partitions, base_index=sent)
         return _Produced()
 
     def commit(self, messages, batchId=None) -> None:

@@ -293,17 +293,18 @@ def test_explicit_available_now_trigger_rejects_memtopic_cap(app, tmp_path):
         app.run(await_termination=False)
 
 
-def test_foreach_batch_adapter_without_signature_keeps_batch_id():
-    """Sinks whose signature inspect can't see (C-callables, exotic
-    wrappers) must still get batch_id when they accept it — dropping it
-    from an exactly-once wrapper silently voids the replay-dedup
-    contract. The adapter probes the 2-arg form first and locks
-    whichever arity works (app.py::_as_foreach_batch)."""
+def test_foreach_batch_adapter_uninspectable_sink_gets_spark_arity():
+    """A sink whose signature inspect can't read (C-callables, exotic
+    wrappers) is called as Spark's own f(df, batch_id): it receives the
+    real batch ids, and a TypeError it raises propagates after exactly
+    one call — the adapter never retries it with fewer arguments, which
+    would re-run a sink's side effects within one batch."""
+    import pytest
+
     from callysto_spark.app import _as_foreach_batch
 
     class _NoSig:
-        # accessing __signature__ raises → inspect.signature() fails →
-        # the adapter's unknown-arity fallback path
+        # accessing __signature__ raises → inspect.signature() fails
         @property
         def __signature__(self):
             raise ValueError("signature unavailable")
@@ -313,54 +314,25 @@ def test_foreach_batch_adapter_without_signature_keeps_batch_id():
             self.seen = []
 
         def __call__(self, df, batch_id):
-            self.seen.append(batch_id)
-
-    class OneArg(_NoSig):
-        def __init__(self):
-            self.seen = []
-
-        def __call__(self, df):
-            self.seen.append("no-id")
+            self.seen.append((df, batch_id))
 
     two = TwoArg()
     adapted = _as_foreach_batch(two)
     adapted("df", 7)
     adapted("df", 8)
-    assert two.seen == [7, 8], "2-arg sink must receive real batch ids"
+    assert two.seen == [("df", 7), ("df", 8)]
 
-    one = OneArg()
+    class OneArgC(_NoSig, list):
+        # a C-level one-argument sink: calling it with (df, batch_id)
+        # raises CPython's own arity TypeError; a 1-arg retry would
+        # append the df
+        __call__ = list.append
+
+    one = OneArgC()
     adapted = _as_foreach_batch(one)
-    adapted("df", 7)  # first call probes 2-arg, falls back once
-    adapted("df", 8)  # locked to 1-arg: no second probe
-    assert one.seen == ["no-id", "no-id"]
-
-
-def test_foreach_batch_adapter_c_sink_internal_typeerror_not_retried():
-    """A C-implemented sink that raises TypeError INTERNALLY adds no
-    Python traceback frame — indistinguishable from a bind failure by
-    frame depth alone, and a retry would re-execute its side effects
-    within one batch. The probe therefore also requires the message to
-    read like CPython's argument-count complaints before falling back.
-
-    `getattr` is a real specimen: inspect.signature() fails on it (so
-    the adaptive path engages) and getattr('df', 7) raises a C-level
-    TypeError ('attribute name must be string') with tb_next=None. The
-    adapter must surface THAT error, not retry 1-arg (whose distinct
-    'expected at least 2 arguments' error would mask the real one).
-    `dir` is the genuine-bind-failure control: 'expected at most 1
-    argument, got 2' IS argument-count wording, so the adapter falls
-    back and locks 1-arg."""
-    import pytest
-
-    from callysto_spark.app import _as_foreach_batch
-
-    adapted = _as_foreach_batch(getattr)
-    with pytest.raises(TypeError, match="attribute name must be string"):
+    with pytest.raises(TypeError, match=r"\(2 given\)"):
         adapted("df", 7)
-
-    adapted = _as_foreach_batch(dir)
-    assert adapted("df", 0) == dir("df")  # fell back to 1-arg
-    assert adapted("df", 1) == dir("df")  # locked: no re-probe
+    assert one == [], "the sink was called again after its TypeError"
 
 
 def test_agent_sink_receives_batch_id_for_exactly_once(spark, tmp_path, sf_dir):

@@ -507,19 +507,58 @@ def test_writer_path_honors_explicit_partition(spark, broker):
 
 
 def test_keyless_round_robin_continues_across_chunks(spark, broker):
-    """r7 ADVICE: the chunked flush restarted produce()'s enumerate at 0
-    per chunk, so keyless round-robin fallback routing reset every
-    flush_rows rows and skewed whenever flush_rows % n_partitions != 0.
-    produce(base_index=...) now carries the running row index across
-    chunks: 12 keyless rows through flush_rows=3 on 4 partitions must
-    land exactly 3 per partition (the old behavior put 4 on each of
-    partitions 0-2 and ZERO on partition 3)."""
+    """The writer flushes a task's rows in PRODUCE_CHUNK_ROWS chunks and
+    carries the running row index across them, so keyless round-robin
+    routing continues at each chunk boundary. 2*CHUNK + 1 keyless rows
+    through ONE task on 3 partitions must land exactly evenly; restarting
+    the index per chunk would put 6,669/6,666/6,666 (3 partitions, unlike
+    4, do not divide a 10,000-row chunk)."""
+    from callysto_spark.sources.memtopic import PRODUCE_CHUNK_ROWS
+
     register(spark)
-    df = spark.range(12).select(F.col("id").cast("string").alias("value")).coalesce(1)
-    MemTopicSink(topic="rr", broker_dir=broker, n_partitions=4, flush_rows=3).write(df)
-    out = spark.read.format("memtopic").option("brokerDir", broker).option("topic", "rr").load()
+    n = 2 * PRODUCE_CHUNK_ROWS + 1
+    (
+        spark.range(n)
+        .select(F.col("id").cast("string").alias("value"))
+        .coalesce(1)
+        .write.format("memtopic")
+        .mode("append")
+        .option("brokerDir", broker)
+        .option("topic", "rr")
+        .option("partitions", "3")
+        .save()
+    )
+    out = (
+        spark.read.format("memtopic")
+        .option("brokerDir", broker)
+        .option("topic", "rr")
+        .option("partitions", "3")
+        .load()
+    )
     counts = {
         r["partition"]: r["n"]
         for r in out.groupBy("partition").agg(F.count(F.lit(1)).alias("n")).collect()
     }
-    assert counts == {0: 3, 1: 3, 2: 3, 3: 3}, counts
+    assert counts == {0: n // 3, 1: n // 3, 2: n // 3}, counts
+
+
+def test_writer_produces_in_bounded_chunks(broker, monkeypatch):
+    """A write task must not materialize its whole partition as one
+    Python list: it calls produce() once per PRODUCE_CHUNK_ROWS rows,
+    each call offset by the rows already sent."""
+    from pyspark.sql import Row
+
+    from callysto_spark.sources import memtopic
+
+    calls = []
+    monkeypatch.setattr(
+        memtopic,
+        "produce",
+        lambda broker_dir, topic, msgs, n_partitions, base_index=0: calls.append(
+            (len(msgs), base_index)
+        ),
+    )
+    chunk = memtopic.PRODUCE_CHUNK_ROWS
+    writer = memtopic.MemTopicBatchWriter({"brokerDir": broker, "topic": "c", "partitions": "3"})
+    writer.write(Row(value=str(i)) for i in range(2 * chunk + 1))
+    assert calls == [(chunk, 0), (chunk, chunk), (1, 2 * chunk)]

@@ -218,9 +218,24 @@ def test_all_bench_rows_in_sampled_window():
     head = set(names[:50])
     out = [n for n, q in reg.items() if q.bench and n not in head]
     assert not out, f"bench=True rows outside the driver's first-50 sample: {out}"
-    # the bench headline set itself is 12 rows — a shrink or growth is
-    # a deliberate act that must update BASELINE bookkeeping, not drift
-    assert sum(1 for q in reg.values() if q.bench) == 12
+    # the bench headline set is pinned by name: perfbench's `queries`
+    # workload runs exactly these rows (the same 12 as the archived
+    # history/BENCH_BASELINE.json), so changing the set is a deliberate
+    # act, not drift
+    assert sorted(n for n, q in reg.items() if q.bench) == [
+        "doc_ngram_jaccard_capped",
+        "doc_pipeline_clean_corpus",
+        "doc_token_stats",
+        "emb_cosine_topk",
+        "emb_ivf_topk",
+        "events_asof_purchase_click",
+        "events_sessionize",
+        "part_type_topk",
+        "q1_pricing_summary",
+        "q3_shipping_priority",
+        "q5_supplier_volume",
+        "supplier_daily_running",
+    ]
 
 
 def test_raw_message_oracle_agrees_on_null_ts_and_negative_user_id(spark, tmp_path):

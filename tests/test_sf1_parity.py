@@ -57,11 +57,33 @@ def sf1_dir():
     return SF1_DIR
 
 
+def _quarter_host_memory_mb() -> int:
+    """A quarter of the host's ``MemTotal`` in MB: DuckDB's default limit
+    (80% of RAM) does not fit beside the Spark JVM, whose heap defaults
+    to half of ``MemTotal``."""
+    with open("/proc/meminfo") as fh:
+        for line in fh:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) // 4096
+    raise RuntimeError("no MemTotal line in /proc/meminfo")
+
+
 @pytest.fixture(scope="session")
-def ddb_sf1(sf1_dir):
+def ddb_sf1(sf1_dir, tmp_path_factory):
     import duckdb
 
-    con = duckdb.connect()
+    # Bounded memory with a spill directory, and ONE thread: at sf1 the
+    # multi-threaded doc_minhash_lsh_pairs oracle leaves about 65k memory
+    # mappings in this process (the kernel's default vm.max_map_count is
+    # 65,530), after which every allocation here fails with "bad
+    # allocation"; one thread peaks near 600.
+    con = duckdb.connect(
+        config={
+            "memory_limit": f"{_quarter_host_memory_mb()}MB",
+            "temp_directory": str(tmp_path_factory.mktemp("duckdb_spill")),
+            "threads": 1,
+        }
+    )
     for t in TABLES:
         # scaled tables are directories of per-copy part files (r14
         # sharded layout — see tools/gen_sf1.generate); DuckDB needs the
