@@ -293,21 +293,19 @@ def test_explicit_available_now_trigger_rejects_memtopic_cap(app, tmp_path):
         app.run(await_termination=False)
 
 
-def test_foreach_batch_adapter_uninspectable_sink_gets_spark_arity():
+class _NoSig:
+    # accessing __signature__ raises → inspect.signature() fails
+    @property
+    def __signature__(self):
+        raise ValueError("signature unavailable")
+
+
+def test_foreach_batch_adapter_without_signature_keeps_batch_id():
     """A sink whose signature inspect can't read (C-callables, exotic
-    wrappers) is called as Spark's own f(df, batch_id): it receives the
-    real batch ids, and a TypeError it raises propagates after exactly
-    one call — the adapter never retries it with fewer arguments, which
-    would re-run a sink's side effects within one batch."""
-    import pytest
-
+    wrappers) is called as Spark's own f(df, batch_id), so it still gets
+    the real batch ids — dropping them from an exactly-once wrapper
+    would silently void the replay-dedup contract."""
     from callysto_spark.app import _as_foreach_batch
-
-    class _NoSig:
-        # accessing __signature__ raises → inspect.signature() fails
-        @property
-        def __signature__(self):
-            raise ValueError("signature unavailable")
 
     class TwoArg(_NoSig):
         def __init__(self):
@@ -321,6 +319,13 @@ def test_foreach_batch_adapter_uninspectable_sink_gets_spark_arity():
     adapted("df", 7)
     adapted("df", 8)
     assert two.seen == [("df", 7), ("df", 8)]
+
+
+def test_foreach_batch_adapter_c_sink_internal_typeerror_not_retried():
+    """A TypeError raised by an uninspectable sink propagates after
+    exactly one call: the adapter never retries it with fewer arguments,
+    which would re-run a sink's side effects within one batch."""
+    from callysto_spark.app import _as_foreach_batch
 
     class OneArgC(_NoSig, list):
         # a C-level one-argument sink: calling it with (df, batch_id)
