@@ -38,6 +38,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from callysto_spark.config import state_store_conf
 from callysto_spark.session import get_spark
 from callysto_spark.sources import SourceSpec
 
@@ -128,18 +129,15 @@ class App:
         name: str,
         spark: SparkSession | None = None,
         checkpoint_root: str | None = None,
-        state_store: Any = None,
+        state_store: str | None = None,
     ) -> None:
+        """``state_store``: ``"rocksdb"``, ``"hdfs"`` or ``None`` (leave
+        the session's provider as it is); see ``config.state_store_conf``."""
+        store_conf = state_store_conf(state_store) if state_store is not None else {}
         self.name = name
         self.spark = spark or get_spark(app_name=name)
-        if state_store is not None:
-            # StateStoreConfig (or anything with .apply) — provider +
-            # RocksDB tuning read from session conf at stream start
-            if isinstance(state_store, str):
-                from callysto_spark.config import StateStoreConfig
-
-                state_store = StateStoreConfig(provider=state_store)
-            state_store.apply(self.spark)
+        for k, v in store_conf.items():
+            self.spark.conf.set(k, v)
         self.checkpoint_root = checkpoint_root or f"/tmp/callysto_spark/{name}/checkpoints"
         self.state: dict[str, Any] = {}
         self._agents: dict[str, _Agent] = {}

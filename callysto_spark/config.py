@@ -34,68 +34,47 @@ class IsolationLevel(str, Enum):
     READ_COMMITTED = "read_committed"
 
 
-_ROCKSDB_PROVIDER = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-_HDFS_PROVIDER = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+_STATE_STORE_PROVIDERS = {
+    "rocksdb": "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "hdfs": "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
+}
+
+# The reference's RocksDB table-store tuning (`stores/rocksdb.rs:35-62`)
+# mapped onto Spark's bundled RocksDB provider, applied unchanged with
+# ``state_store="rocksdb"``; a Spark conf set after ``App()`` overrides
+# any of them. Changelog checkpointing uploads the changelog instead of
+# full snapshots (the reference's changelog-topic durability,
+# `table.rs:59-62`).
+_ROCKSDB_CONF: dict[str, str] = {
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+    "spark.sql.streaming.stateStore.rocksdb.compactOnCommit": "false",
+    # cap total off-heap memory across stores
+    "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage": "true",
+    # per-batch numRowsTotal metrics
+    "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows": "true",
+    "spark.sql.streaming.stateStore.rocksdb.writeBufferSizeMB": "64",  # rocksdb.rs:35
+    "spark.sql.streaming.stateStore.rocksdb.maxWriteBufferNumber": "3",  # rocksdb.rs:36
+    "spark.sql.streaming.stateStore.rocksdb.blockCacheSizeMB": "2048",  # rocksdb.rs:38
+    # rocksdb.rs:56-62 derives it from the process rlimit; -1 = unlimited
+    "spark.sql.streaming.stateStore.rocksdb.maxOpenFiles": "-1",
+}
 
 
-@dataclass
-class StateStoreConfig:
-    """State-store provider + RocksDB tuning surface.
-
-    The reference ships a tuned RocksDB store for table state
-    (`stores/rocksdb.rs:35-41`: 64 MB write buffer, 3 memtables, 2 GB
-    block cache; `rocksdb.rs:56-62`: max-open-files from the process
-    rlimit). Spark's analog is the bundled RocksDB state-store provider
-    plus ``spark.sql.streaming.stateStore.rocksdb.*`` — this maps the
-    reference's knobs onto those confs. Defaults mirror the reference's
-    defaults where a Spark conf exists.
-
-    At 100 TB the default HDFS-backed store (all state on the JVM heap)
-    is the wrong answer for any large keyspace; RocksDB keeps state
-    off-heap/on-disk with changelog (incremental) checkpointing.
-    """
-
-    provider: str = "rocksdb"  # "rocksdb" | "hdfs"
-    # Incremental checkpointing: upload the changelog instead of full
-    # snapshots (the reference's changelog-topic durability, table.rs:59-62).
-    changelog_checkpointing: bool = True
-    compact_on_commit: bool = False
-    write_buffer_size_mb: int | None = 64  # rocksdb.rs:35 DEFAULT_WRITE_BUFFER_SIZE
-    max_write_buffer_number: int | None = 3  # rocksdb.rs:36
-    block_cache_size_mb: int | None = 2048  # rocksdb.rs:38 DEFAULT_BLOCK_CACHE_SIZE
-    max_open_files: int | None = -1  # rocksdb.rs:56-62 rlimit-derived; -1 = unlimited
-    bounded_memory_usage: bool = True  # cap total off-heap across stores
-    track_total_rows: bool = True  # per-batch numRowsTotal metrics
-    extra: dict[str, str] = field(default_factory=dict)
-
-    def to_spark_conf(self) -> dict[str, str]:
-        conf: dict[str, str] = {
-            "spark.sql.streaming.stateStore.providerClass": (
-                _ROCKSDB_PROVIDER if self.provider == "rocksdb" else _HDFS_PROVIDER
-            )
-        }
-        if self.provider == "rocksdb":
-            r = "spark.sql.streaming.stateStore.rocksdb."
-            conf[r + "changelogCheckpointing.enabled"] = str(self.changelog_checkpointing).lower()
-            conf[r + "compactOnCommit"] = str(self.compact_on_commit).lower()
-            conf[r + "boundedMemoryUsage"] = str(self.bounded_memory_usage).lower()
-            conf[r + "trackTotalNumberOfRows"] = str(self.track_total_rows).lower()
-            if self.write_buffer_size_mb is not None:
-                conf[r + "writeBufferSizeMB"] = str(self.write_buffer_size_mb)
-            if self.max_write_buffer_number is not None:
-                conf[r + "maxWriteBufferNumber"] = str(self.max_write_buffer_number)
-            if self.block_cache_size_mb is not None:
-                conf[r + "blockCacheSizeMB"] = str(self.block_cache_size_mb)
-            if self.max_open_files is not None:
-                conf[r + "maxOpenFiles"] = str(self.max_open_files)
-        conf.update(self.extra)
-        return conf
-
-    def apply(self, spark) -> None:
-        """Set on a live session: the provider is read from session conf
-        at stream start, so this takes effect for queries started after."""
-        for k, v in self.to_spark_conf().items():
-            spark.conf.set(k, v)
+def state_store_conf(provider: str) -> dict[str, str]:
+    """Session confs for a state-store provider name: ``"rocksdb"``
+    (off-heap/on-disk state, the reference's table store) or ``"hdfs"``
+    (Spark's default, all state on the JVM heap). They are read at
+    stream start, so they take effect for queries started after they
+    are set. Any other name raises ``ValueError``."""
+    if provider not in _STATE_STORE_PROVIDERS:
+        raise ValueError(
+            f"state_store must be one of {sorted(_STATE_STORE_PROVIDERS)} or None, "
+            f"got {provider!r}"
+        )
+    conf = {"spark.sql.streaming.stateStore.providerClass": _STATE_STORE_PROVIDERS[provider]}
+    if provider == "rocksdb":
+        conf.update(_ROCKSDB_CONF)
+    return conf
 
 
 @dataclass

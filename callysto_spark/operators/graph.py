@@ -17,18 +17,8 @@ with iteration count (each round nests another join). On a real cluster
 swap ``localCheckpoint`` for reliable ``checkpoint()`` against the
 checkpoint dir if executor loss during the loop must be survivable.
 
-Two algorithms share one output contract:
-
-- ``algorithm="label"`` (default): min-label propagation — rounds
-  needed = graph diameter. Near-dup clusters are shallow (a handful of
-  rounds), so this is the right default for dedup pipelines.
-- ``algorithm="star"``: alternating large-star/small-star contraction
-  (Kiveris et al., "Connected Components in MapReduce and Beyond",
-  SoCC'14) — O(log n) rounds regardless of diameter, the refinement
-  for adversarial high-diameter graphs (long chains of pairwise
-  near-dups, web link graphs). Each round is two groupBy+join passes
-  over the edge list instead of label propagation's one, so it wins
-  exactly when diameter >> log n.
+Rounds needed = graph diameter. Near-dup clusters are shallow (a handful
+of rounds), which is the shape every dedup pipeline feeds it.
 """
 
 from __future__ import annotations
@@ -45,7 +35,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 25,
-    algorithm: str = "label",
 ) -> DataFrame:
     """(src, dst) undirected edges → (vertex, component), component =
     the minimum vertex id in the connected component (deterministic).
@@ -53,19 +42,12 @@ def connected_components(
     Isolated vertices don't appear in edges and so don't appear in the
     output (callers union them back if needed). Self-loops are ignored.
 
-    ``algorithm="label"`` converges in diameter rounds;
-    ``algorithm="star"`` in O(log n) rounds (see module docstring).
-
     Warns (``RuntimeWarning``) if the propagation has not reached a
     fixpoint within ``max_iterations`` — the returned labeling is then a
     refinement (components may still be split), and downstream survivor
-    selection would keep too many documents. Raise ``max_iterations`` or
-    use ``algorithm="star"`` for high-diameter graphs.
+    selection would keep too many documents. Raise ``max_iterations``
+    for high-diameter graphs.
     """
-    if algorithm == "star":
-        return _connected_components_star(edges, src, dst, max_iterations)
-    if algorithm != "label":
-        raise ValueError(f"algorithm must be 'label' or 'star', got {algorithm!r}")
     # r15 optimization (guide §2.4 "share one exchange" / §2.3 "aggregate
     # before you shuffle"): the persisted edge list is keyed AND sorted
     # by the per-round join key `b` once at setup, so every iteration's
@@ -119,8 +101,7 @@ def connected_components(
         warnings.warn(
             f"connected_components did not converge within {max_iterations} "
             "iterations; returned components may still be split. Increase "
-            "max_iterations (rounds needed = graph diameter) or use a "
-            "large-star/small-star contraction for high-diameter graphs.",
+            "max_iterations (rounds needed = graph diameter).",
             RuntimeWarning,
             stacklevel=2,
         )
@@ -160,101 +141,3 @@ def _propagate_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
         )
     )
 
-
-def _large_star(e: DataFrame) -> DataFrame:
-    """One large-star round: every node u connects its strictly-larger
-    neighbors to min(Γ(u) ∪ {u}). Shuffles: one groupBy(u) for the
-    neighborhood min; the join back rides the same hash partitioning;
-    distinct dedups the emitted edges."""
-    sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    mins = sym.groupBy("u").agg(F.min("v").alias("mn"))
-    return (
-        sym.join(mins, "u")
-        .select("u", "v", F.least(F.col("mn"), F.col("u")).alias("m"))
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def _small_star(e: DataFrame) -> DataFrame:
-    """One small-star round: orient each edge big→small; every node u
-    connects its ≤-neighbors (and itself) to the smallest of them."""
-    o = (
-        e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    mins = o.groupBy("u").agg(F.min("v").alias("m"))
-    joined = o.join(mins, "u")
-    return (
-        joined.filter(F.col("v") != F.col("m"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .unionByName(mins.select("u", F.col("m").alias("v")))
-        .distinct()
-    )
-
-
-def _connected_components_star(
-    edges: DataFrame, src: str, dst: str, max_iterations: int
-) -> DataFrame:
-    """Alternating large-star/small-star contraction (Kiveris et al.,
-    SoCC'14, Algorithm 2). Converges in O(log n) rounds to the star
-    graph: every non-root vertex holds exactly one edge to its
-    component's minimum id.
-
-    Convergence probe is EXACT (count equality + left-anti emptiness),
-    not a hash-sum: a false "converged" would silently split
-    components. Both probes are cheap scans of the just-checkpointed
-    round output. Lineage is truncated per round exactly like the
-    label-propagation path.
-    """
-    raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    # vertex universe BEFORE dropping self-loops: a vertex appearing only
-    # in a self-loop still labels itself, matching the label-propagation
-    # variant's output exactly
-    all_vertices = (
-        raw.select(F.col("u").alias("vertex"))
-        .unionByName(raw.select(F.col("v").alias("vertex")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    e = (
-        raw.filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    converged = False
-    prev = e
-    for _ in range(max_iterations):
-        nxt = _small_star(_large_star(prev)).localCheckpoint(eager=True)
-        same_count = nxt.count() == prev.count()
-        unchanged = (
-            same_count
-            and nxt.join(prev, ["u", "v"], "left_anti").limit(1).count() == 0
-        )
-        release_local_checkpoint(prev)  # RDD-level; see label-path note
-        prev = nxt
-        if unchanged:
-            converged = True
-            break
-    if not converged:
-        warnings.warn(
-            f"star-contraction did not converge within {max_iterations} "
-            "iterations; returned components may still be split.",
-            RuntimeWarning,
-            stacklevel=3,
-        )
-    # Converged state is a star forest: (child, root) edges. Roots have
-    # no outgoing edge — they label themselves via the anti join. Both
-    # result-backing checkpoints (vertex universe + final star edges)
-    # are reclaimed at the next registry-boundary sweep (r13), not on
-    # session stop — same contract as the label-propagation path above.
-    track_transient(all_vertices)
-    track_transient(prev)
-    child_labels = prev.select(F.col("u").alias("vertex"), F.col("v").alias("component"))
-    roots = all_vertices.join(
-        prev.select(F.col("u").alias("vertex")).distinct(), "vertex", "left_anti"
-    ).select("vertex", F.col("vertex").alias("component"))
-    return child_labels.unionByName(roots)

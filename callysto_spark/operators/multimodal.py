@@ -74,7 +74,6 @@ def extract_features(
     media: DataFrame,
     dim: int = 16,
     decoder: str = "fake",
-    batch_hint: int = 256,
 ) -> DataFrame:
     """binary media column → fixed-dim feature vectors via mapInPandas.
 

@@ -96,7 +96,6 @@ def kmv_distinct(
     group: Sequence[str],
     key: Column,
     k: int = 256,
-    hash_engine: str = "md5_60",
     out: str = "kmv_distinct",
 ) -> DataFrame:
     """KMV distinct-count estimate of ``key`` per ``group``.
@@ -111,10 +110,10 @@ def kmv_distinct(
     lands on the same integer. Relative error ~ 1/sqrt(k-2) (6.3% at
     k=256).
 
-    Only ``md5_60`` is accepted: the estimator divides by the hash
-    range's upper bound (2^60), so a full-signed-range engine like
-    ``xxhash64`` would silently yield negative or astronomically wrong
-    estimates (h_k near 0 or below it).
+    Keys are hashed with ``md5_60``: the estimator divides by the hash
+    range's upper bound (2^60), so a full-signed-range hash like
+    ``xxhash64`` would yield negative or astronomically wrong estimates
+    (h_k near 0 or below it).
 
     NULL keys are ignored — ``count(DISTINCT key)`` semantics, and the
     cross-engine-safe choice (a NULL hash would rank NULLS FIRST in a
@@ -124,16 +123,12 @@ def kmv_distinct(
     extra shuffle against the full group list for an edge case; the
     paired oracle (kmv_distinct_sql) omits the group identically.
     """
-    if hash_engine != "md5_60":
-        raise ValueError(
-            f"kmv_distinct requires the bounded-range md5_60 hash; got {hash_engine!r}"
-        )
     from callysto_spark.operators.util import barrier_select
 
     # __h rides the barrier_select Generate barrier (r15): _bounded_topk's
     # isNotNull guard otherwise pushes below this project and re-evaluates
     # the md5+conv hash per row in the filter as well as the projection
-    dh = barrier_select(df, *group, __h=string_hash(key, hash_engine)).distinct()
+    dh = barrier_select(df, *group, __h=string_hash(key, "md5_60")).distinct()
     topk = _bounded_topk(dh, group, "__h", k)
     kth = F.max("__h")
     est = F.when(F.count(F.lit(1)) < k, F.count(F.lit(1))).otherwise(
@@ -178,21 +173,20 @@ def bottom_k_sample(
     group: Sequence[str],
     key: Column,
     k: int = 1024,
-    hash_engine: str = "md5_60",
 ) -> DataFrame:
     """Deterministic uniform sample: the k rows per group whose
-    ``key``-hash is smallest. ``key`` must be row-unique (e.g. a
-    primary key); ties on the 60-bit hash (rare but expected at 1e9+
-    keys) are broken by the key itself, so the surviving row SET is a
-    pure function of the data even when a collision straddles the
-    rank-k boundary. NULL keys are excluded (engines disagree on NULL
-    placement in rankings, and a NULL key breaks the row-uniqueness
-    contract anyway). Adds column ``__h`` (the sample ranks by it);
-    caller drops it."""
+    ``md5_60`` ``key``-hash is smallest (``spec_hash_sql`` recomputes it
+    in DuckDB). ``key`` must be row-unique (e.g. a primary key); ties on
+    the 60-bit hash (rare but expected at 1e9+ keys) are broken by the
+    key itself, so the surviving row SET is a pure function of the data
+    even when a collision straddles the rank-k boundary. NULL keys are
+    excluded (engines disagree on NULL placement in rankings, and a NULL
+    key breaks the row-uniqueness contract anyway). Adds column ``__h``
+    (the sample ranks by it); caller drops it."""
     from callysto_spark.operators.util import barrier_select
 
     # same barrier rationale as kmv_distinct: one hash eval per row
-    withh = barrier_select(df, *df.columns, __h=string_hash(key, hash_engine))
+    withh = barrier_select(df, *df.columns, __h=string_hash(key, "md5_60"))
     return _bounded_topk(withh, group, "__h", k, tiebreak=[key.asc()])
 
 

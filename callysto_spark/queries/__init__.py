@@ -69,70 +69,17 @@ def load_all() -> dict[str, Query]:
     """Import every query module (side effect: registration) and return REGISTRY.
 
     Registry ORDER is deliberate: the correctness driver samples the FIRST
-    50 entries in iteration order; the head window is rotated each round so
-    no query's newest green driver row ages more than 2 rounds (the
-    freshness invariant the round-6 VERDICT grades).
-
-    Rotation history: r1-r3 sampled arrays/messages/events/tpch head;
-    r4 rotated to the tpch2/3/4 tail; r5 rotated the newly
-    oracle-checkable sketch/raw-message queries plus the pre-r4 head
-    rows; r6 promoted the five stalest bench-headline rows plus the
-    tpch2/3/4 tail; r7 re-certified the five r4 rows + all 30 r5 rows;
-    r8 promoted all 35 r6-latest rows plus the two new BLAS rows; r9
-    promoted all 37 r7-latest rows, keeping the 13 rows whose code or
-    oracle changed that round (BLAS oracles, max_bucket_freq LSH,
-    shared-oracle ANN) plus the always-on LLM heads; r10 promoted all
-    37 r8-latest rows (the two r9-deferred Jaccard rows heading the
-    queue), keeping the 7 newest-machinery rows for a second
-    consecutive certification. r11 promoted all 37 rows whose newest
-    green record was r9, keeping the 6 always-on LLM-ops rows plus
-    the 7 bench-headline rows so every one of the 12 bench.py
-    headline queries was hash-certified in the same round as the
-    re-recorded anchor. r12 promoted all 37 rows whose newest green
-    record was r10 (TPC-H tail, window/frame/histogram family,
-    text-analysis, near-dup pair/survivor, BLAS ANN, MinHash/LSH,
-    SimHash, ivf_assign). r13 promoted all 37 rows whose newest green
-    record was r11 (streaming/serde, events windows, grouping-sets/
-    cube/rollup/pivot, joins/set-ops, string/null/array/map,
-    fingerprint/winnowing, q5/q6). r14 promoted all 37 rows whose
-    newest green record was r12 (TPC-H tail, scalar-subquery/setop/
-    argmax/window-frame/histogram family, text-analysis, near-dup
-    pair/survivor, BLAS ANN, MinHash/LSH, SimHash, ivf_assign) —
-    but its hand-maintained 7-row watch list silently dropped
-    q5_supplier_volume (a bench=True row that the r14 promoted list
-    did not cover), the r14 ADVICE high finding. r15 (THIS round)
-    promotes ALL 37 rows whose newest green record is r13 — the r13
-    window (history/CORRECTNESS_r13.json) minus the 13-slot kept head:
-    streaming/serde, events windows, grouping-sets/cube/rollup/
-    pivot, joins/set-ops, string/null/array/map funcs, fingerprint/
-    winnowing, and q5/q6 — and the watch list is now DERIVED
-    (bench=True rows minus those already in promoted/llm_kept), so
-    the bench-coverage invariant is mechanical: every one of the 12
-    bench.py headline rows is inside the driver's first-50 sample
-    every round, enforced by a ValueError guard below and pinned by
-    ``tests/test_oracle.py::test_all_bench_rows_in_sampled_window``.
-    No registry row's semantics change in r15 (registry frozen at
-    87). r16 (THIS round) promotes ALL 37 rows whose newest green
-    record is r14 (the r14 promoted list = the rotation complement in
-    history/PERF_r15.json): TPC-H tail, scalar-subquery/setop/argmax/
-    window-frame/histogram family, text-analysis, near-dup pair/survivor,
-    BLAS ANN, MinHash/LSH, SimHash, ivf_assign — exactly covering
-    the 9 queries the r15 optimization restructured that fell
-    outside the r15 driver window (the r15 VERDICT item 2). That
-    queue has ZERO bench rows, so the derived watch grows to 8
-    (q5_supplier_volume rejoins it) and doc_dedup_exact (non-bench,
-    r15-green) sits out of the kept head for one round to land the
-    window on exactly 50; it re-enters the r17 queue well inside
-    the 2-round freshness invariant.
+    50 entries in iteration order. The head is ``promoted`` (the rows
+    whose newest green driver result is the oldest), then every
+    ``bench=True`` row not already in it, then the always-sampled
+    LLM-ops rows, so no row goes more than 2 rounds without a green
+    result and every bench row is certified each round. The
+    ``ValueError`` guards below keep the head at exactly 50 registered,
+    distinct names with every bench row inside it.
     """
     from callysto_spark.queries import llm_ops, tpch2, tpch3, tpch4, events, arrays, messages, tpch  # noqa: F401
 
     promoted = [
-        # the 37 rows whose newest green is r14 (the r14 promoted
-        # window; zero overlap with this round's kept head) — heads
-        # the 9 rows the r15 optimization restructured without driver
-        # coverage (LSH/MinHash, survivor stats, jaccard_pairs,
-        # stratified_sample, BLAS parity, ivf_assign, label_near_pairs)
         "doc_lsh_verified_near_dups",
         "doc_minhash_lsh_pairs",
         "doc_near_dup_survivor_stats",
@@ -171,8 +118,7 @@ def load_all() -> dict[str, Query]:
         "shipping_delay_histogram",
         "suppliers_many_parts",
     ]
-    # North-star LLM-ops rows kept in the always-sampled head
-    # (doc_dedup_exact sits out this round — see the docstring).
+    # North-star LLM-ops rows kept in the always-sampled head.
     llm_kept = [
         "doc_ngram_jaccard_capped",
         "doc_near_dup_components",
@@ -180,19 +126,10 @@ def load_all() -> dict[str, Query]:
         "doc_pipeline_clean_corpus",
         "emb_ivf_topk",
     ]
-    # Bench-headline rows not already covered by promoted/llm_kept —
-    # DERIVED, not hand-maintained (the r14 ADVICE high finding: a
-    # prose-maintained 7-row list silently dropped q5_supplier_volume
-    # when the rotation stopped covering it). All 12 bench=True rows
-    # must sit in every driver window so each round's hash
-    # certification covers exactly what the bench anchor measures.
+    # Bench rows not already covered by promoted/llm_kept — derived, so
+    # no hand-kept list can drop one.
     covered = set(promoted) | set(llm_kept)
     watch = [n for n, q in REGISTRY.items() if q.bench and n not in covered]
-    # r17 promotion queue: the 37 rows whose newest green record is
-    # r15 — the r15 promoted window (history/CORRECTNESS_r15.json) plus
-    # doc_dedup_exact (deferred from this round's head, newest green
-    # r15); the r17 window then drops back to the 6-row llm_kept head
-    # once the bench-row arithmetic allows.
     head = promoted + watch + llm_kept
     # ValueError, not assert: these guard the driver-sample window and
     # must survive python -O (a stripped assert would silently ship a
@@ -208,7 +145,6 @@ def load_all() -> dict[str, Query]:
             f"size); got {len(head)} — adjust the promoted list so "
             f"promoted+derived_watch+llm_kept lands on 50"
         )
-    # The mechanical bench-coverage invariant (r14 ADVICE item 1).
     head_set = set(head)
     bench_out = [n for n, q in REGISTRY.items() if q.bench and n not in head_set]
     if bench_out:

@@ -68,9 +68,8 @@ FROM events GROUP BY event_type
 )
 def avro_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3/S4 Avro serde through the correctness gate: encode each event
-    struct to Avro BINARY with the pure-Python codec, decode it back
-    (engine='auto' — the jar-free path in this image), aggregate the
-    decoded rows. encode∘decode must be the identity, so the oracle is
+    struct to Avro BINARY with the pure-Python codec, decode it back,
+    aggregate the decoded rows. encode∘decode must be the identity, so the oracle is
     the straight aggregation over events — any wire-format defect
     breaks the hash."""
     from callysto_spark.serde.avro import decode_avro, encode_avro

@@ -10,9 +10,11 @@ deserialize Kafka payloads to values / typed records / Polars DataFrames
   Python — the analog of the reference's schema parse; records→struct,
   array→array, map→map, union-with-null→nullable, logical
   timestamp-micros/millis→timestamp, date→date, decimal→decimal).
-- ``decode_avro`` / ``encode_avro``: column transforms over
-  ``pyspark.sql.avro.functions`` — they require the spark-avro jar
-  (not bundled with pip pyspark); gated with a clear error.
+- ``decode_avro`` / ``encode_avro``: column transforms over the
+  pure-Python Arrow-batched codec (``serde/avro_py.py``), the one Avro
+  path; it needs no spark-avro jar (not bundled with pip pyspark). A
+  deployment that has the jar can call ``pyspark.sql.avro.functions``
+  directly.
 - ``decode_json`` / ``encode_json``: the jar-free schema-ful path
   (``from_json``/``to_json``) with the SAME StructType, so pipelines are
   serde-pluggable — the S5 "payload → DataFrame rows" shape is native
@@ -97,94 +99,23 @@ def avro_schema_to_spark(schema_json: str) -> T.StructType:
     return dt
 
 
-def _avro_functions():
-    try:
-        from pyspark.sql.avro.functions import from_avro, to_avro
-
-        return from_avro, to_avro
-    except ImportError as exc:  # pragma: no cover
-        raise RuntimeError(
-            "avro serde requires the spark-avro jar "
-            "(--packages org.apache.spark:spark-avro_2.13:<spark-version>)"
-        ) from exc
-
-
-_JAR_LOADED: dict[int, bool] = {}  # keyed by session id — classpaths differ
-
-
-def avro_jar_loaded() -> bool:
-    """True iff the spark-avro data source is on the active session's
-    classpath. (The Python `from_avro` wrapper imports and even builds a
-    Column without it — the AVRO_NOT_LOADED failure only fires at
-    analysis — so 'auto' engine selection needs this explicit probe.)
-
-    The probe result is cached PER SESSION (two sessions can have
-    different classpaths), and not cached at all when there is no active
-    session — otherwise a premature call would pin False forever and
-    route a later jar-loaded session to the slower Python codec."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        return False  # no session to probe — don't poison the cache
-    key = id(spark)
-    if key not in _JAR_LOADED:
-        try:
-            # AvroDataSourceV2 ships only in the spark-avro jar;
-            # a few avro shim classes (AvroFileFormat) are bundled in
-            # spark-sql even without it, so probe the V2 source class
-            spark._jvm.java.lang.Class.forName("org.apache.spark.sql.avro.AvroDataSourceV2")
-            _JAR_LOADED[key] = True
-        except Exception:
-            _JAR_LOADED[key] = False
-    return _JAR_LOADED[key]
-
-
-def decode_avro(
-    col: Column | str, schema_json: str, engine: str = "auto", mode: str = "failfast"
-) -> Column:
+def decode_avro(col: Column | str, schema_json: str, mode: str = "failfast") -> Column:
     """Binary Avro payload column → struct column (S3/S4/S5).
-
-    ``engine``: 'jvm' = spark-avro's from_avro (fastest, needs the jar);
-    'python' = the pure-Python Arrow-batched codec (serde/avro_py.py, no
-    jar); 'auto' = jvm if the jar is loaded, else python — so the Avro
-    path always RUNS, jar or not.
 
     ``mode``: 'failfast' (default) aborts the task on a malformed
     payload; 'permissive' yields a struct with all fields NULL per bad
-    record — same option, same semantics, on BOTH engines (spark-avro
-    takes it as from_avro's option map and emits nullResultRow; the
-    python codec catches the decoder's ValueError per record and emits
-    the same all-null-fields struct).
+    record (spark-avro's nullResultRow): the codec catches the decoder's
+    ValueError per record and emits the all-null-fields struct. An
+    unknown ``mode`` raises ``ValueError`` here, on the driver.
     """
-    # validate BEFORE the engine split: Spark's ParseMode.fromString
-    # silently coerces unknown strings to PERMISSIVE, so a typo'd
-    # 'fail_fast' on the jvm path would flip strict decoding to silent
-    # nulling with only a log warning
-    if mode not in ("failfast", "permissive"):
-        raise ValueError(f"mode must be 'failfast' or 'permissive', got {mode!r}")
-    if engine == "jvm" or (engine == "auto" and avro_jar_loaded()):
-        from_avro, _ = _avro_functions()
-        return from_avro(col, schema_json, {"mode": mode.upper()})
     from callysto_spark.serde.avro_py import decode_avro_udf
 
     return decode_avro_udf(schema_json, mode=mode)(F.col(col) if isinstance(col, str) else col)
 
 
-def encode_avro(col: Column, schema_json: str | None = None, engine: str = "auto") -> Column:
-    """Struct column → binary Avro payload (S7 sink encoding).
-    The python engine needs ``schema_json`` (the jar derives it from the
-    column type)."""
-    if engine == "jvm" or (engine == "auto" and avro_jar_loaded()):
-        _, to_avro = _avro_functions()
-        # When a schema is declared, the writer MUST use it: to_avro(col)
-        # alone derives the writer schema from the Catalyst type, whose
-        # union branch order (["long","null"] vs the declared
-        # ["null","long"]) need not match — and a from_avro reader holding
-        # the declared schema would then misdecode every union field.
-        return to_avro(col, schema_json) if schema_json is not None else to_avro(col)
-    if schema_json is None:
-        raise ValueError("encode_avro without the spark-avro jar needs schema_json")
+def encode_avro(col: Column, schema_json: str) -> Column:
+    """Struct column → binary Avro payload (S7 sink encoding), written
+    with the declared ``schema_json``."""
     from callysto_spark.serde.avro_py import encode_avro_udf
 
     return encode_avro_udf(schema_json)(col)

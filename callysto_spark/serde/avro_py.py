@@ -289,8 +289,7 @@ def _is_null(value: Any, nan_as_null: bool = True) -> bool:
     - the Arrow-native Spark crossing (``nan_as_null=False``): Arrow
       distinguishes real NULL slots (None) from literal NaN doubles, so
       ONLY None is null and a genuine NaN value encodes as an IEEE NaN
-      double — matching the JVM to_avro engine bit-for-bit, so
-      engine='auto' output cannot depend on jar presence.
+      double — matching spark-avro's to_avro bit-for-bit.
     """
     if value is None:
         return True
@@ -387,8 +386,8 @@ def encode_record(value: dict, schema: dict | str, nan_as_null: bool = True) -> 
     a float NaN in a nullable field encodes as the union's null branch.
     The Arrow-native Spark crossing passes False — Arrow already
     distinguishes NULL slots (None) from literal NaN doubles, and a
-    genuine NaN must encode as an IEEE NaN exactly like the JVM
-    to_avro engine does (see _is_null)."""
+    genuine NaN must encode as an IEEE NaN exactly like spark-avro's
+    to_avro does (see _is_null)."""
     if isinstance(schema, str):
         schema = json.loads(schema)
     out = bytearray()
@@ -422,8 +421,7 @@ def _fully_nullable(dt):
 def decode_avro_udf(schema_json: str, mode: str = "failfast"):
     """Arrow-batched UDF: binary Avro payload column → struct column
     typed by ``avro_schema_to_spark(schema_json)``. The jar-free
-    counterpart of ``from_avro`` (use ``decode_avro`` when the
-    spark-avro jar is on the classpath — JVM-side is faster).
+    counterpart of spark-avro's ``from_avro``; ``decode_avro`` wraps it.
 
     ``mode`` mirrors spark-avro's option of the same name:
     ``failfast`` (default) lets a malformed payload fail the task with
@@ -431,9 +429,8 @@ def decode_avro_udf(schema_json: str, mode: str = "failfast"):
     record into a struct with every field NULL and keeps going — the
     100 TB posture, where one corrupt Kafka message must cost one row,
     not the job. All-null FIELDS, not a null row: that is exactly what
-    the JVM engine emits (AvroDataToCatalyst's nullResultRow), so
-    engine='auto' output cannot depend on jar presence; a NULL payload
-    (tombstone) still decodes to a NULL struct on both engines."""
+    spark-avro emits (AvroDataToCatalyst's nullResultRow); a NULL
+    payload (tombstone) still decodes to a NULL struct."""
     from pyspark.sql.functions import arrow_udf
     from pyspark.sql.pandas.types import to_arrow_type
 
@@ -471,9 +468,8 @@ def decode_avro_udf(schema_json: str, mode: str = "failfast"):
     @arrow_udf(spark_type)
     def _decode_arrow(payloads: pa.Array) -> pa.Array:
         # to_pylist renders null payload slots as None; a NULL payload
-        # (Kafka tombstone) decodes to a NULL STRUCT — matching the JVM
-        # from_avro's null-intolerant eval, so engine='auto' results
-        # cannot depend on whether the jar is loaded
+        # (Kafka tombstone) decodes to a NULL STRUCT — matching
+        # spark-avro from_avro's null-intolerant eval
         records = [_one(b) for b in payloads.to_pylist()]
         return pa.array(records, type=arrow_type)
 
@@ -493,7 +489,7 @@ def encode_avro_udf(schema_json: str):
         # nan_as_null=False: to_pylist renders a NULL double slot as
         # None and a literal NaN as float('nan') — the distinction is
         # real here, and a genuine NaN must encode as an IEEE NaN double
-        # (JVM-engine parity), not be silently folded to the null branch
+        # (spark-avro parity), not be silently folded to the null branch
         payloads = [
             None if rec is None else encode_record(rec, schema, nan_as_null=False)
             for rec in structs.to_pylist()

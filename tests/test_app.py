@@ -56,8 +56,6 @@ def test_table_agent_parity_counts_and_recovery(spark, tmp_path, sf_dir, provide
     """Reference inmemory.rs odd/even tables + runtime/recovery.rs:
     restart must resume state from the checkpoint — on both state-store
     providers (RocksDB is the at-scale one; reference stores/rocksdb.rs)."""
-    from callysto_spark.config import StateStoreConfig
-
     prev_provider = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     stream_dir = tmp_path / "stream"
     stream_dir.mkdir()
@@ -69,7 +67,7 @@ def test_table_agent_parity_counts_and_recovery(spark, tmp_path, sf_dir, provide
             "test_state",
             spark=spark,
             checkpoint_root=str(tmp_path / "ckpt"),
-            state_store=StateStoreConfig(provider=provider),
+            state_store=provider,
         )
         src = SourceSpec.parquet_stream(
             str(stream_dir),
@@ -113,6 +111,52 @@ def test_table_agent_parity_counts_and_recovery(spark, tmp_path, sf_dir, provide
         spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev_provider)
     else:
         spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+
+
+STATE_STORE_PREFIX = "spark.sql.streaming.stateStore."
+
+
+def _state_store_confs(spark) -> dict[str, str]:
+    return {k: v for k, v in spark.conf.getAll.items() if k.startswith(STATE_STORE_PREFIX)}
+
+
+def test_unknown_state_store_provider_is_rejected(spark, tmp_path):
+    """A provider name other than "rocksdb"/"hdfs" (here a case slip)
+    must raise before any conf is set, not fall back to the heap store."""
+    before = _state_store_confs(spark)
+    with pytest.raises(ValueError, match="hdfs.*rocksdb"):
+        App("bad_store", spark=spark, checkpoint_root=str(tmp_path), state_store="RocksDB")
+    assert _state_store_confs(spark) == before
+
+
+def test_rocksdb_state_store_confs_are_pinned(spark, tmp_path):
+    """The exact state-store confs a session holds after
+    App(state_store="rocksdb"): the provider class plus the reference's
+    RocksDB tuning (stores/rocksdb.rs:35-62)."""
+    before = _state_store_confs(spark)
+    for k in before:
+        spark.conf.unset(k)
+    try:
+        App("rocks_store", spark=spark, checkpoint_root=str(tmp_path), state_store="rocksdb")
+        r = STATE_STORE_PREFIX + "rocksdb."
+        assert _state_store_confs(spark) == {
+            STATE_STORE_PREFIX + "providerClass": (
+                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+            ),
+            r + "changelogCheckpointing.enabled": "true",
+            r + "compactOnCommit": "false",
+            r + "boundedMemoryUsage": "true",
+            r + "trackTotalNumberOfRows": "true",
+            r + "writeBufferSizeMB": "64",
+            r + "maxWriteBufferNumber": "3",
+            r + "blockCacheSizeMB": "2048",
+            r + "maxOpenFiles": "-1",
+        }
+    finally:
+        for k in _state_store_confs(spark):
+            spark.conf.unset(k)
+        for k, v in before.items():
+            spark.conf.set(k, v)
 
 
 def test_task_timer_service_lifecycle(app, spark):
@@ -607,8 +651,6 @@ def test_table_agent_one_call_per_key_null_key_and_restart(spark, tmp_path):
     call; a NULL key is its own key; two long keys that share the NULL
     key's bucket and round to one float64 value keep separate counts; and
     every count continues across an App restart."""
-    from callysto_spark.config import StateStoreConfig
-
     providers = "spark.sql.streaming.stateStore.providerClass"
     arrow_batch = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev = {k: spark.conf.get(k, None) for k in (providers, arrow_batch)}
@@ -639,7 +681,7 @@ def test_table_agent_one_call_per_key_null_key_and_restart(spark, tmp_path):
             "bucket_sem",
             spark=spark,
             checkpoint_root=str(tmp_path / "ckpt"),
-            state_store=StateStoreConfig(provider="rocksdb"),
+            state_store="rocksdb",
         )
         stream = SourceSpec.parquet_stream(str(stream_dir), schema="k long, v long").load(spark)
         table = a.table("counts", key_schema="k long", value_schema="cnt long")

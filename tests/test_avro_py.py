@@ -64,10 +64,10 @@ def test_round_trip_nested():
 
 
 def test_auto_engine_selects_runnable_path(spark):
-    """decode_avro/encode_avro engine='auto' must produce columns that
-    actually EXECUTE in this image (no spark-avro jar → python codec).
-    The jar's absence only surfaces at analysis time, so this guards the
-    capability probe, not just imports."""
+    """The public decode_avro/encode_avro column transforms must produce
+    columns that actually EXECUTE without the spark-avro jar: a decode
+    sums back to the encoded values and a re-encode reproduces the
+    payload bytes."""
     from callysto_spark.serde.avro import decode_avro, encode_avro
 
     s = json.dumps(
@@ -123,34 +123,10 @@ def test_nullable_long_exact_above_2_53(spark):
     assert {r["v"] for r in back.collect()} == {big, None}
 
 
-def test_jvm_encode_uses_declared_schema(spark, monkeypatch):
-    """encode_avro(engine='jvm') must hand the DECLARED schema to
-    to_avro: without it the writer schema is Catalyst-derived, whose
-    union branch order need not match the declared ["null","long"] —
-    and a from_avro reader holding the declared schema then misdecodes
-    every union field."""
-    from callysto_spark.serde import avro as avro_mod
-
-    seen = {}
-
-    def fake_functions():
-        def to_avro(col, schema=None):
-            seen["schema"] = schema
-            return col
-
-        return (lambda *a: None), to_avro
-
-    monkeypatch.setattr(avro_mod, "_avro_functions", fake_functions)
-    avro_mod.encode_avro(F.lit(1), '{"type":"record","name":"R","fields":[]}', engine="jvm")
-    assert seen["schema"] == '{"type":"record","name":"R","fields":[]}'
-    avro_mod.encode_avro(F.lit(1), None, engine="jvm")  # no schema → derive
-    assert seen["schema"] is None
-
-
 def test_null_payload_decodes_to_null_struct(spark):
     """A NULL payload (Kafka tombstone) must decode to a NULL STRUCT —
-    the JVM from_avro semantics — not a struct of all-NULL fields, so
-    engine='auto' results cannot depend on whether the jar is loaded."""
+    spark-avro's from_avro semantics — not a struct of all-NULL
+    fields."""
     s = json.dumps(
         {"type": "record", "name": "R", "fields": [{"name": "v", "type": ["null", "long"]}]}
     )

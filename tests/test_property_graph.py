@@ -1,5 +1,5 @@
-"""Property test: connected_components (both algorithms) vs a pure-
-Python union-find reference on hypothesis-generated graphs.
+"""Property test: connected_components (min-label propagation) vs a
+pure-Python union-find reference on hypothesis-generated graphs.
 
 The operator labels every vertex with its component's MINIMUM id
 (`operators/graph.py` contract) and feeds the near-dup survivor
@@ -49,16 +49,15 @@ def test_components_match_union_find_reference(spark):
         df = spark.createDataFrame(edges, ["src", "dst"]).repartition(3)
         from callysto_spark.operators.graph import connected_components
 
-        for algo in ("label", "star"):
-            got = {
-                r["vertex"]: r["component"]
-                for r in connected_components(df, algorithm=algo, max_iterations=40).collect()
-            }
-            # self-loop-only vertices may or may not surface depending on
-            # the algorithm's edge filtering; they are singletons either way
-            extra = {v: c for v, c in got.items() if v in looped_only}
-            assert all(v == c for v, c in extra.items()), f"{algo}: {extra}"
-            core = {v: c for v, c in got.items() if v not in looped_only}
-            assert core == want, f"{algo}: mismatch {dict(set(core.items()) ^ set(want.items()))}"
+        got = {
+            r["vertex"]: r["component"]
+            for r in connected_components(df, max_iterations=40).collect()
+        }
+        # self-loop-only vertices may or may not surface; they are
+        # singletons either way
+        extra = {v: c for v, c in got.items() if v in looped_only}
+        assert all(v == c for v, c in extra.items()), extra
+        core = {v: c for v, c in got.items() if v not in looped_only}
+        assert core == want, f"mismatch {dict(set(core.items()) ^ set(want.items()))}"
 
     run()

@@ -180,60 +180,6 @@ def test_propagate_round_single_join_reuses_edge_cache(spark):
         sym.unpersist()
 
 
-def test_connected_components_star_hand_graph(spark):
-    """Star contraction must produce the identical (vertex → min-id)
-    labeling as label propagation on the same hand graph."""
-    from callysto_spark.operators.graph import connected_components
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (10, 12), (21, 20)],
-        ["src", "dst"],
-    ).repartition(4)
-    got = {
-        r["vertex"]: r["component"]
-        for r in connected_components(edges, algorithm="star").collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
-
-
-def test_connected_components_star_logarithmic_rounds(spark):
-    """Path 0-1-...-40 has diameter 40: label propagation needs 40
-    rounds, star contraction must finish within ~log2(41)+slack — the
-    whole point of the variant. 10 iterations would leave label
-    propagation far from a fixpoint (warns); star must converge silently
-    and fully merge the chain."""
-    import warnings
-
-    from callysto_spark.operators.graph import connected_components
-
-    edges = spark.createDataFrame([(i, i + 1) for i in range(40)], ["src", "dst"]).repartition(4)
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", RuntimeWarning)
-        done = connected_components(edges, max_iterations=10, algorithm="star")
-        rows = done.collect()
-    assert {r["component"] for r in rows} == {0}
-    assert len(rows) == 41
-
-
-def test_connected_components_star_matches_label_random(spark):
-    """Random graph: both algorithms must emit the exact same labeling."""
-    import random
-
-    from callysto_spark.operators.graph import connected_components
-
-    rng = random.Random(7)
-    edges = [(rng.randrange(200), rng.randrange(200)) for _ in range(150)]
-    df = spark.createDataFrame(edges, ["src", "dst"]).repartition(8)
-    by_label = {
-        r["vertex"]: r["component"] for r in connected_components(df, max_iterations=50).collect()
-    }
-    by_star = {
-        r["vertex"]: r["component"]
-        for r in connected_components(df, algorithm="star").collect()
-    }
-    assert by_star == by_label
-
-
 def test_word_shingles_short_doc_no_ansi_crash(spark):
     """Docs shorter than n tokens must yield one truncated shingle, not
     an INVALID_ARRAY_INDEX_IN_ELEMENT_AT error (try_element_at path)."""

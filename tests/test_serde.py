@@ -3,7 +3,6 @@ callysto-avro surface; F3 fixture schema from FIXTURES.md)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F, types as T
 
 from callysto_spark.serde import avro_schema_to_spark, decode_json, encode_json
@@ -51,18 +50,3 @@ def test_json_serde_round_trip(spark):
     assert dict(encoded.dtypes)["value"] == "binary"
     decoded = encoded.select(decode_json("value", REF_SCHEMA).alias("r")).select("r.*")
     assert sorted(tuple(r) for r in decoded.collect()) == [(1, "x"), (2, "y")]
-
-
-def test_avro_functions_gated(spark):
-    """from_avro/to_avro need the spark-avro jar; without it the serde
-    raises a clear RuntimeError (never a silent fallback)."""
-    from callysto_spark.serde import decode_avro
-
-    df = spark.createDataFrame([(b"x",)], "value binary")
-    try:
-        df.select(decode_avro("value", REF_SCHEMA)).collect()
-    except RuntimeError as exc:
-        assert "spark-avro" in str(exc)
-    except Exception:
-        # jar present → decoding garbage fails inside spark; fine
-        pass

@@ -171,7 +171,7 @@ def test_avro_permissive_mode_nulls_bad_records(spark):
 
     df, schema_json = _payload_df(spark)
     out = df.select(
-        "rid", "corrupt", decode_avro("payload", schema_json, engine="python", mode="permissive").alias("r")
+        "rid", "corrupt", decode_avro("payload", schema_json, mode="permissive").alias("r")
     ).collect()
     for row in out:
         if row["corrupt"]:
@@ -195,21 +195,8 @@ def test_avro_failfast_mode_fails_the_job(spark):
 
     df, schema_json = _payload_df(spark)
     with pytest.raises(Exception) as err:
-        df.select(decode_avro("payload", schema_json, engine="python", mode="failfast").alias("r")).collect()
+        df.select(decode_avro("payload", schema_json, mode="failfast").alias("r")).collect()
     assert "avro" in str(err.value).lower() or "ValueError" in str(err.value)
-
-
-def test_avro_engine_parity_under_corruption(spark):
-    """python vs JVM from_avro must agree record-by-record in permissive
-    mode (engine='auto' output must not depend on jar presence)."""
-    from callysto_spark.serde.avro import avro_jar_loaded, decode_avro
-
-    if not avro_jar_loaded():
-        pytest.skip("spark-avro jar not on the classpath")
-    df, schema_json = _payload_df(spark)
-    py = df.select("rid", decode_avro("payload", schema_json, engine="python", mode="permissive").alias("r")).collect()
-    jv = df.select("rid", decode_avro("payload", schema_json, engine="jvm", mode="permissive").alias("r")).collect()
-    assert sorted(map(str, py)) == sorted(map(str, jv))
 
 
 # ------------------------------------------------------------ PNG / WAV
@@ -348,7 +335,7 @@ def test_permissive_decode_through_agent_loop(spark, tmp_path):
     @app.agent("decoder", src)
     def decoder(df, ctx):
         out = df.select(
-            decode_avro(F.unbase64("value"), schema_json, engine="python", mode="permissive").alias("r")
+            decode_avro(F.unbase64("value"), schema_json, mode="permissive").alias("r")
         ).collect()
         got["rows"] += len(out)
         for row in out:

@@ -70,30 +70,24 @@ def _quarter_host_memory_mb() -> int:
 
 @pytest.fixture(scope="session")
 def ddb_sf1(sf1_dir, tmp_path_factory):
-    import duckdb
+    from tests.sf1_oracle import ProcessOracle
 
-    # Bounded memory with a spill directory, and ONE thread: at sf1 the
-    # multi-threaded doc_minhash_lsh_pairs oracle leaves about 65k memory
-    # mappings in this process (the kernel's default vm.max_map_count is
-    # 65,530), after which every allocation here fails with "bad
-    # allocation"; one thread peaks near 600.
-    con = duckdb.connect(
-        config={
-            "memory_limit": f"{_quarter_host_memory_mb()}MB",
-            "temp_directory": str(tmp_path_factory.mktemp("duckdb_spill")),
-            "threads": 1,
-        }
-    )
+    views = {}
     for t in TABLES:
         # scaled tables are directories of per-copy part files (r14
         # sharded layout — see tools/gen_sf1.generate); DuckDB needs the
         # glob where Spark reads the directory natively
         path = f"{sf1_dir}/{t}.parquet"
-        if os.path.isdir(path):
-            path = f"{path}/*.parquet"
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
-    yield con
-    con.close()
+        views[t] = f"{path}/*.parquet" if os.path.isdir(path) else path
+    # bounded memory with a spill directory; each oracle runs in its own
+    # process at DuckDB's default thread count (see tests/sf1_oracle.py)
+    return ProcessOracle(
+        views,
+        {
+            "memory_limit": f"{_quarter_host_memory_mb()}MB",
+            "temp_directory": str(tmp_path_factory.mktemp("duckdb_spill")),
+        },
+    )
 
 
 @pytest.mark.parametrize("name", _NAMES)

@@ -7,7 +7,6 @@ sketch path stays covered here)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from callysto_spark.operators.dedup import string_hash
@@ -237,15 +236,6 @@ def test_kmv_and_sample_match_pure_python_reference(spark, sf_dir):
     )
     q = type1_quantiles(samp, ["event_type"], "value", [("p50", 1, 2), ("p90", 9, 10)])
     assert {r["event_type"]: (r["p50"], r["p90"]) for r in q.collect()} == expect_q
-
-
-def test_kmv_rejects_full_range_hash_engines(spark):
-    """The KMV estimator divides by 2^60 — the md5_60 range bound — so a
-    full-signed-range engine (xxhash64) must be refused loudly instead
-    of returning negative/garbage estimates."""
-    df = spark.range(10).select(F.col("id").cast("string").alias("k"))
-    with pytest.raises(ValueError, match="md5_60"):
-        kmv_distinct(df, [], F.col("k"), k=4, hash_engine="xxhash64")
 
 
 def test_sketch_oracle_agrees_on_null_hazards(spark, tmp_path):
