@@ -17,6 +17,17 @@ from pathlib import Path
 from pyspark.sql import SparkSession
 
 MEMINFO = "/proc/meminfo"
+# Generated classes Spark keeps compiled (``spark.sql.codegen.cache.maxEntries``,
+# default 100). The registry's queries generate more classes than that in one
+# pass, so under the default LRU every warm pass recompiled most of them with
+# Janino, inside tasks and exchange preparation. The cap is at least twice the
+# registry's working set (re-check it with ``tools/opt_measure.py codegen
+# --all``). An entry holds the class's source and its loaded class, and
+# streaming code that is new in every micro-batch (a per-batch literal) fills
+# the cache up to the cap. The conf is static: ``CodeGenerator`` sizes its
+# cache once per JVM from the first session's conf, so a session built outside
+# ``get_spark`` (the correctness driver's own, for one) keeps 100.
+CODEGEN_CACHE_ENTRIES = 2048
 # the directory that holds the ``callysto_spark`` package
 ENGINE_ROOT = str(Path(__file__).resolve().parents[1])
 
@@ -72,6 +83,7 @@ def get_spark(
         # sketch size while still far below a partition's row count.
         .config("spark.sql.optimizer.windowGroupLimitThreshold", str(64 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config(
             "spark.driver.memory",

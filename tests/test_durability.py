@@ -17,7 +17,8 @@ so both injected modes provably fire and failures reproduce exactly:
   from the write being an overwrite of a batch_id-addressed path — the
   documented filesystem-sink idempotency pattern, sinks/exactly_once.py).
 External kills come from a seeded RNG: each cycle stops the app at a
-random point in flight, then a fresh App resumes from the checkpoint.
+random point in flight (a random time, or a random share of its backlog
+when it would drain sooner), then a fresh App resumes from the checkpoint.
 """
 
 from __future__ import annotations
@@ -37,6 +38,7 @@ from callysto_spark.sources.memtopic import produce
 TOTAL_MSGS = 2000
 CYCLES = 6
 PER_PARTITION_CAP = 25  # × 4 partitions ⇒ ≥20 micro-batches for 2000 msgs
+BATCH_ROWS = PER_PARTITION_CAP * 4
 
 
 def test_randomized_crash_soak_exactly_once(spark, tmp_path):
@@ -86,17 +88,24 @@ def test_randomized_crash_soak_exactly_once(spark, tmp_path):
         a.enable_auto_restart(poll_seconds=0.25, max_restarts=100)
         a.run(await_termination=False)
         deadline = time.time() + (120 if final else rng.uniform(2.0, 7.0))
+        # a cycle fast enough to drain before its deadline is stopped once a
+        # seeded share of its backlog is in, with two batches of it left
+        backlog = produced - len(delivered)
+        kill_at = None if final else len(delivered) + rng.randint(1, backlog - 2 * BATCH_ROWS)
         try:
             while time.time() < deadline:
-                if len(delivered) >= produced:
+                if final and len(delivered) >= produced:
                     return  # drained everything produced so far
-                time.sleep(0.2)
+                if not final and len(delivered) >= kill_at:
+                    break
+                time.sleep(0.05)
             if final:
                 pytest.fail(
                     f"final drain incomplete: {len(delivered)}/{produced} "
                     f"(crashes={crashes}, batches={len(attempts)})"
                 )
-            crashes["kills"] += 1  # external kill, mid-flight
+            if len(delivered) < produced:
+                crashes["kills"] += 1  # external kill, mid-flight
         finally:
             a.stop()
 

@@ -1,8 +1,15 @@
-"""``get_spark``'s host-derived defaults, checked without starting a JVM."""
+"""``get_spark``'s defaults: host-derived ones checked without starting a
+JVM, and the codegen cache size checked both ways."""
 
 from __future__ import annotations
 
 import callysto_spark.session as session
+from callysto_spark.queries import load_all
+from tools.opt_measure import codegen_counts
+
+# Classes the whole registry generates in one pass: the first-pass total of
+# ``tools/opt_measure.py codegen --all`` on the sf0.01 test corpus.
+REGISTRY_CODEGEN_CLASSES = 960
 
 
 class _FakeBuilder:
@@ -73,3 +80,23 @@ def test_default_heap_is_half_the_host_memory(monkeypatch, tmp_path):
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
     session.get_spark("override")
     assert builder.conf["spark.driver.memory"] == "3g"
+
+
+def test_codegen_cache_holds_the_registry(monkeypatch):
+    builder = _FakeBuilder()
+    monkeypatch.setattr(session.SparkSession, "builder", builder)
+    session.get_spark("codegen-cache")
+    cap = int(builder.conf["spark.sql.codegen.cache.maxEntries"])
+    assert cap == session.CODEGEN_CACHE_ENTRIES
+    assert cap >= 2 * REGISTRY_CODEGEN_CLASSES
+
+
+def test_warm_bench_pass_compiles_no_classes(spark, sf_dir):
+    # Spark's default cap of 100 generated classes made every warm pass of
+    # the bench set recompile about 200 of them. The count is JVM-wide, and
+    # AQE numbers whole-stage classes in the order stages finish, so a few
+    # recompilations can race in; the margin still separates ~200 from 0.
+    registry = load_all()
+    bench = [name for name, q in sorted(registry.items()) if q.bench]
+    counts = codegen_counts(spark, registry, bench, sf_dir)
+    assert sum(second for _, second in counts.values()) < 20, counts
