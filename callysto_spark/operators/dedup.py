@@ -27,8 +27,10 @@ the r15 duplicate-row sweep — see tests/test_dup_fuzz.py).
 
 from __future__ import annotations
 
+import operator
 import random
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
@@ -38,30 +40,32 @@ from callysto_spark.operators.util import transient_persist
 # h reduced mod P first.
 _MERSENNE_P = (1 << 31) - 1
 
-# Hash engines for the MinHash/SimHash/LSH family. ``xxhash64`` is the
-# production default — fastest, JVM-native — but engine-SPECIFIC: no
-# other system can recompute it, so cross-engine verification (the
-# DuckDB oracle) is impossible. ``md5_60`` is the spec-defined portable
-# engine: the first 15 hex chars (60 bits) of the standard MD5 digest
-# (RFC 1321) of the UTF-8 string, parsed as an integer — bit-identical
-# in ANY engine with an md5() builtin (DuckDB:
-# ``CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)``; 15 chars, not 16,
-# so the value always fits signed int64). Both run fully JVM-side.
-HASH_ENGINES = ("xxhash64", "md5_60")
+# Seed of the MinHash permutation parameters (``_hash_params``); the
+# DuckDB oracle in queries/llm_ops.py inlines the same generator's
+# output, so both engines run the identical permutations.
+_MINHASH_SEED = 42
 
-def string_hash(col: Column, engine: str = "xxhash64") -> Column:
-    """Deterministic int64 hash of a string column, per ``engine``.
+# SimHash signature width: 64 bits, a 16-char hex string.
+_SIMHASH_BITS = 64
 
-    ``xxhash64`` spans the full signed-64 range; ``md5_60`` is
-    nonnegative in [0, 2^60). Every consumer either reduces mod
-    ``_MERSENNE_P`` (MinHash) or tests bits 0..63 (SimHash), so the
-    range difference is semantics-neutral.
+
+def string_hash(col: Column) -> Column:
+    """The ``md5_60`` spec hash of a string column: the first 15 hex
+    chars (60 bits) of the standard MD5 digest (RFC 1321) of the UTF-8
+    string, parsed as a nonnegative int64 in [0, 2^60). Fully JVM-side
+    and bit-identical in any engine with an md5() builtin
+    (``spec_hash_sql`` is the DuckDB twin; 15 chars, not 16, so the value
+    always fits signed int64), which is what lets a SQL oracle recompute
+    every MinHash/SimHash/LSH/KMV output of this engine. Change the two
+    together.
     """
-    if engine == "xxhash64":
-        return F.xxhash64(col)
-    if engine == "md5_60":
-        return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-    raise ValueError(f"unknown hash engine {engine!r}; expected one of {HASH_ENGINES}")
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
+def spec_hash_sql(expr: str) -> str:
+    """DuckDB SQL for the md5_60 spec hash of a VARCHAR expression: the
+    oracle twin of ``string_hash``."""
+    return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
 
 
 def dedup_exact(df: DataFrame, keys: Sequence[str], order_by: Sequence[Column]) -> DataFrame:
@@ -111,7 +115,7 @@ def word_shingles(toks: Column, n: int) -> Column:
     """Distinct word n-gram shingles from a MATERIALIZED tokens column.
 
     The tokens argument must be a genuine attribute (use
-    ``shingle_arrays`` / ``with_shingles``): a lambda that references an
+    ``shingle_arrays``): a lambda that references an
     inline expression (e.g. the regex split itself) re-evaluates it per
     element — measured 12× slower on the documents table.
     """
@@ -126,18 +130,6 @@ def word_shingles(toks: Column, n: int) -> Column:
             F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))),
             lambda i: F.concat_ws(" ", *[F.try_element_at(toks, i + k) for k in range(n)]),
         )
-    )
-
-
-def with_shingles(df: DataFrame, text_col: str, n: int, out: str = "gs") -> DataFrame:
-    """df + distinct word-n-gram shingle array column (tokens
-    materialized through a Generate barrier — see ``shingle_arrays``;
-    input re-parallelized if under-partitioned)."""
-    cols = df.columns
-    return (
-        stage_text(df, text_col)
-        .select("*", F.explode(F.array(tokens_col(F.col(text_col)))).alias("__toks"))
-        .select(*cols, word_shingles(F.col("__toks"), n).alias(out))
     )
 
 
@@ -188,12 +180,81 @@ def shingle_arrays(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFra
     )
 
 
-def shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """DISTINCT (doc, g) word-n-gram shingle rows (one explode over the
-    in-row shingle arrays — see ``shingle_arrays`` for the plan
-    rationale)."""
-    return shingle_arrays(df, id_col, text_col, n).select(
-        "doc", F.explode("gs").alias("g")
+def _cap_buckets(rows: DataFrame, keys: list[str], cap: int) -> DataFrame:
+    """``rows`` restricted to buckets (rows sharing ``keys``) holding
+    2..``cap`` members: the skew-immune two-pass bucket cap shared by
+    the capped Jaccard path and both banding candidate generators.
+
+    The one-pass alternative — groupBy(keys).collect_list(...).filter(
+    size <= cap) — applies the cap AFTER the aggregation has already
+    buffered the bucket's full member list: a true stop-shingle
+    (boilerplate n-gram present in 0.1-1% of a 100 TB corpus) or a
+    template-cluster band bucket puts millions of rows into ONE group's
+    aggregation buffer before the filter drops it — executor OOM at
+    exactly the scale the cap exists for (round-7 verdict finding #1).
+    Pass 1 counts members per bucket: count() partial-aggregates
+    map-side, so even the hottest bucket contributes one long per map
+    partition — skew-immune by construction. Pass 2 LEFT-SEMI joins the
+    rows against the live bucket set BEFORE anything groups or pairs
+    them: hot-bucket rows stream through the join probe and are dropped
+    without ever being buffered, and every bucket downstream holds
+    2..cap members by construction (no post-agg size filter needed).
+    One extra bounded exchange (rows hashed on ``keys``) buys bounded
+    memory; the semi-join output is already partitioned on ``keys``, so
+    a following groupBy on them rides the same exchange.
+
+    shuffle_hash hint on the build (live) side: without it the semi join
+    plans as SortMergeJoin and SORTS the full row table by its key —
+    measured 16.1s vs 3.95s at the 30x corpus on the capped Jaccard
+    query (the sort was 75% of the query). The hash build side is only
+    the distinct live buckets per partition, far smaller than the probe;
+    at larger corpora the per-partition build scales down with shuffle
+    partitions. At small SF, AQE may still upgrade it to a broadcast
+    join — either way, no sort. Residual skew note: a hot bucket's rows
+    are never BUFFERED, but they do transit the shuffle once into one
+    probe partition's read; AQE skew-join (on — session.py) splits that
+    probe partition across tasks with the build side replicated, so
+    even the transit is parallel, not a straggler.
+    """
+    live = (
+        rows.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter((F.col("df") >= 2) & (F.col("df") <= cap))
+        .select(*keys)
+    )
+    return rows.join(live.hint("shuffle_hash"), keys, "left_semi")
+
+
+def _bucket_pairs(
+    banded: DataFrame, keys: list[str], cap: int | None, *extra: Column
+) -> DataFrame:
+    """Distinct (doc_a, doc_b, *extra) pairs, doc_a < doc_b, of docs
+    sharing a (band, bucket) row of ``banded`` — the banding self-join
+    of LSH and SimHash candidates. ``banded`` is persisted (it feeds
+    both join sides, and the cap's count pass) and, when ``cap`` is set,
+    first pruned to buckets of 2..cap members (``_cap_buckets``).
+    ``extra`` columns may reference both sides as ``a.*`` / ``b.*``."""
+    banded = transient_persist(banded)
+    if cap is not None:
+        banded = _cap_buckets(banded, keys, cap)
+    a = banded.alias("a")
+    b = banded.alias("b")
+    same_bucket = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    return (
+        a.join(b, reduce(operator.and_, same_bucket) & (F.col("a.doc") < F.col("b.doc")))
+        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"), *extra)
+        .distinct()
+    )
+
+
+def _jaccard_above(pairs: DataFrame, union_sz: Column, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, inter, union_sz, jaccard) of the ``pairs`` whose
+    int/int Jaccard (bit-deterministic, no rounding) is ≥ ``threshold``."""
+    return (
+        pairs.withColumn("union_sz", union_sz)
+        .withColumn("jaccard", F.col("inter") / F.col("union_sz"))
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "inter", "union_sz", "jaccard")
     )
 
 
@@ -240,52 +301,16 @@ def ngram_jaccard_pairs(
         arr.select("doc", F.size("gs").alias("n_sh"), F.explode("gs").alias("g"))
     )
     if max_doc_freq is not None:
-        # Two-pass document-frequency cap (round-7 verdict finding #1).
-        # The previous one-pass — groupBy(g).collect_list(...).filter(
-        # size(ds) <= cap) — applied the cap AFTER the aggregation had
-        # already buffered the bucket's full member list: a true
-        # stop-shingle (boilerplate n-gram present in 0.1-1% of a 100 TB
-        # corpus) puts millions of (doc, n_sh) structs into ONE group's
-        # aggregation buffer before the filter drops it — executor OOM
-        # at exactly the scale the cap exists for. Pass 1 counts
-        # document frequency per shingle: count() partial-aggregates
-        # map-side, so even the hottest shingle contributes one long per
-        # map partition — skew-immune by construction. Pass 2 LEFT-SEMI
-        # joins the shingle rows against the df-banded live set BEFORE
-        # any collect_list: hot-shingle rows stream through the join
-        # probe and are dropped without ever being buffered, and every
-        # bucket the aggregation sees holds 2..max_doc_freq members by
-        # construction (no post-agg size filter needed). One extra
-        # bounded exchange (shingle rows hashed on g) buys bounded
-        # memory; the semi-join output is already partitioned on g, so
-        # the collect_list groupBy rides the same exchange.
+        # Document-frequency cap (``_cap_buckets``): every shingle
+        # bucket the collect_list sees holds 2..max_doc_freq members.
         # array_sort INSIDE the agg: collect_list order is partition-
         # dependent, and sorting there yields a materialized attribute
         # (the Aggregate is a projection barrier — an outer array_sort
         # would be CollapseProject-inlined into every element_at).
         # n_sh stays the FULL set size — standard filtered-candidate
         # jaccard divides by the true union.
-        # shuffle_hash hint on the build (live) side: without it the
-        # semi join plans as SortMergeJoin and SORTS the full shingle
-        # table by its string key — measured 16.1s vs 3.95s at the 30x
-        # corpus (the sort was 75% of the query). The hash build side
-        # is only the distinct live shingles (2..cap df) per partition,
-        # far smaller than the probe; at larger corpora the per-
-        # partition build scales down with shuffle partitions. At small
-        # SF, AQE may still upgrade it to a broadcast join — either
-        # way, no sort. Residual skew note: a stop-shingle's rows are
-        # never BUFFERED, but they do transit the shuffle once into one
-        # probe partition's read; AQE skew-join (on — session.py) splits
-        # that probe partition across tasks with the build side
-        # replicated, so even the transit is parallel, not a straggler.
-        live = (
-            sh.groupBy("g")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter((F.col("df") >= 2) & (F.col("df") <= max_doc_freq))
-            .select("g")
-        )
         buckets = (
-            sh.join(live.hint("shuffle_hash"), "g", "left_semi")
+            _cap_buckets(sh, ["g"], max_doc_freq)
             .groupBy("g")
             .agg(F.array_sort(F.collect_list(F.struct("doc", "n_sh"))).alias("ds"))
         )
@@ -325,12 +350,7 @@ def ngram_jaccard_pairs(
             )
             .agg(F.count("*").alias("inter"))
         )
-    return (
-        pairs.withColumn("union_sz", F.col("na") + F.col("nb") - F.col("inter"))
-        .withColumn("jaccard", F.col("inter") / F.col("union_sz"))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "inter", "union_sz", "jaccard")
-    )
+    return _jaccard_above(pairs, F.col("na") + F.col("nb") - F.col("inter"), threshold)
 
 
 def verify_candidate_pairs(
@@ -363,7 +383,7 @@ def verify_candidate_pairs(
     )
     # shuffle_hash hint (r15): without it this semi join plans as
     # SortMergeJoin and SORTS the corpus side by id (the same pathology
-    # the capped-Jaccard df-prefilter hit — see ngram_jaccard_pairs);
+    # the bucket-cap prefilter hit — see _cap_buckets);
     # the build side is the bounded touched-doc id set.
     narrowed = df.join(
         touched.withColumnRenamed("doc", id_col).hint("shuffle_hash"),
@@ -374,22 +394,20 @@ def verify_candidate_pairs(
     a = arr.select(F.col("doc").alias("doc_a"), F.col("gs").alias("gs_a"))
     b = arr.select(F.col("doc").alias("doc_b"), F.col("gs").alias("gs_b"))
     paired = cand.join(a, "doc_a").join(b, "doc_b")
-    return (
+    return _jaccard_above(
         paired.select(
             "doc_a",
             "doc_b",
             F.size(F.array_intersect("gs_a", "gs_b")).alias("inter"),
             (F.size("gs_a") + F.size("gs_b")).alias("__sz"),
-        )
-        .withColumn("union_sz", F.col("__sz") - F.col("inter"))
-        .withColumn("jaccard", F.col("inter") / F.col("union_sz"))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "inter", "union_sz", "jaccard")
+        ),
+        F.col("__sz") - F.col("inter"),
+        threshold,
     )
 
 
-def _hash_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
-    rng = random.Random(seed)
+def _hash_params(num_hashes: int) -> list[tuple[int, int]]:
+    rng = random.Random(_MINHASH_SEED)
     return [(rng.randrange(1, _MERSENNE_P), rng.randrange(0, _MERSENNE_P)) for _ in range(num_hashes)]
 
 
@@ -399,14 +417,11 @@ def minhash_signatures(
     text_col: str,
     num_hashes: int = 64,
     n: int = 4,
-    seed: int = 42,
-    hash_engine: str = "xxhash64",
 ) -> DataFrame:
     """MinHash signature per document over word n-gram shingles.
 
-    Shingles are hashed with ``string_hash(…, hash_engine)`` — xxhash64
-    (production default) or the portable ``md5_60`` spec hash, which a
-    SQL oracle can recompute — then permuted with
+    Shingles are hashed with the portable ``md5_60`` spec hash
+    (``string_hash``, which a SQL oracle can recompute), then permuted with
     ``(a_i*h + b_i) mod 2^31-1``; the signature is the per-permutation
     minimum, computed ENTIRELY in-row over the document's shingle-hash
     array (``array_min`` over a ``transform`` per permutation): zero
@@ -415,7 +430,7 @@ def minhash_signatures(
     hash array is materialized through a second Generate barrier so the
     shingle-hash pass runs once, not once per permutation.
     """
-    params = _hash_params(num_hashes, seed)
+    params = _hash_params(num_hashes)
     arr = shingle_arrays(df, id_col, text_col, n)
     hashed = arr.select(
         "doc",
@@ -423,7 +438,7 @@ def minhash_signatures(
             F.array(
                 F.transform(
                     F.col("gs"),
-                    lambda g: F.pmod(string_hash(g, hash_engine), F.lit(_MERSENNE_P)),
+                    lambda g: F.pmod(string_hash(g), F.lit(_MERSENNE_P)),
                 )
             )
         ).alias("hs"),
@@ -445,7 +460,6 @@ def minhash_lsh_candidates(
     sig_df: DataFrame,
     bands: int = 16,
     rows_per_band: int = 4,
-    hash_engine: str = "xxhash64",
     max_bucket_freq: int | None = None,
 ) -> DataFrame:
     """LSH banding over minhash signatures → candidate near-dup pairs.
@@ -454,9 +468,8 @@ def minhash_lsh_candidates(
     colliding on any whole band become a candidate pair. The join is on
     (band_idx, band_hash) — high-cardinality buckets, so the shuffle is
     balanced; a hot bucket (boilerplate docs) is exactly the skew AQE
-    splits. The band hash runs through the same pluggable
-    ``string_hash`` engine as the signatures (comma-joined band values
-    as the input string). Output: distinct (doc_a, doc_b).
+    splits. The band hash is the same ``string_hash`` as the signatures
+    (comma-joined band values as the input string). Output: distinct (doc_a, doc_b).
 
     ``max_bucket_freq`` (the 100 TB knob): a bucket shared by m docs
     emits C(m, 2) pairs — a template cluster of 1M near-identical docs
@@ -464,8 +477,7 @@ def minhash_lsh_candidates(
     (AQE skew-split included — it balances the shuffle, not the output)
     can un-explode. Capping drops buckets with more than
     ``max_bucket_freq`` members BEFORE the self-join via the same
-    skew-immune two-pass as the capped Jaccard path (partial-agg
-    ``groupBy(band, bh).count()`` → df-band filter → left-semi join):
+    skew-immune two-pass as the capped Jaccard path (``_cap_buckets``):
     hot-bucket rows stream through the probe and are dropped, never
     buffered or paired. Recall note: members of an over-cap bucket are
     near-identical docs that collide in MANY buckets, so they almost
@@ -503,53 +515,32 @@ def minhash_lsh_candidates(
                     b.alias("band"),
                     string_hash(
                         F.concat_ws(",", F.transform(F.slice(sig_ok, b * rows_per_band + 1, rows_per_band), lambda x: x.cast("string"))),
-                        hash_engine,
                     ).alias("bh"),
                 ),
             )
         ).alias("bk"),
     ).select("doc", F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
-    banded = transient_persist(banded)
-    if max_bucket_freq is not None:
-        live = (
-            banded.groupBy("band", "bh")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter((F.col("df") >= 2) & (F.col("df") <= max_bucket_freq))
-            .select("band", "bh")
-        )
-        banded = banded.join(live.hint("shuffle_hash"), ["band", "bh"], "left_semi")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh")) & (F.col("a.doc") < F.col("b.doc")))
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
-    )
+    return _bucket_pairs(banded, ["band", "bh"], max_bucket_freq)
 
 
-def simhash(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    bits: int = 64,
-    hash_engine: str = "xxhash64",
-) -> DataFrame:
-    """SimHash per document over whitespace tokens, as a hex string.
+def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """64-bit SimHash per document over whitespace tokens, as a 16-char
+    hex string.
 
     Per-bit vote: +1 if the token hash has the bit set, −1 otherwise;
     sign of the total sets the output bit. Implemented as a fold over the
     token-hash array with a per-bit counter array (higher-order
-    functions, per-row local — no shuffle at all). Output is a
-    ``bits/4``-char hex string (avoids signed-64 overflow under ANSI).
+    functions, per-row local — no shuffle at all). Hex output avoids
+    signed-64 overflow under ANSI.
 
-    Under ``hash_engine='md5_60'`` the token hash has 60 effective bits,
-    so with the default ``bits=64`` the top 4 output bits are always 0
-    (every token votes −1 there) — deterministic on both engines, with
+    The ``md5_60`` token hash has 60 effective bits, so the top 4 output
+    bits are always 0 (every token votes −1 there) — deterministic, with
     band 0 of a 4-band blocking carrying 12 useful bits instead of 16.
     """
+    bits = _SIMHASH_BITS
     staged = stage_text(df, text_col).withColumn(
         "__hashes",
-        F.transform(tokens_col(F.col(text_col)), lambda t: string_hash(t, hash_engine)),
+        F.transform(tokens_col(F.col(text_col)), string_hash),
     )
     hashes = F.col("__hashes")
     bit_idx = F.sequence(F.lit(bits - 1), F.lit(0))  # MSB first
@@ -591,8 +582,8 @@ def simhash_candidates(
     ``max_bucket_freq``: same quadratic-output guard as
     :func:`minhash_lsh_candidates` — a (band, slice) bucket with m
     members emits C(m, 2) pairs, so template clusters are dropped
-    before the self-join via the skew-immune two-pass count →
-    df-band → left-semi prefilter (see that docstring for the recall
+    before the self-join via the skew-immune two-pass prefilter
+    (``_cap_buckets``; see :func:`minhash_lsh_candidates` for the recall
     argument and the SCALING.md measurement).
     """
     if max_hamming is None:
@@ -616,17 +607,6 @@ def simhash_candidates(
             )
         ).alias("bk"),
     ).select("doc", "simhash", F.col("bk.band").alias("band"), F.col("bk.slice").alias("slice"))
-    banded = transient_persist(banded)
-    if max_bucket_freq is not None:
-        live = (
-            banded.groupBy("band", "slice")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter((F.col("df") >= 2) & (F.col("df") <= max_bucket_freq))
-            .select("band", "slice")
-        )
-        banded = banded.join(live.hint("shuffle_hash"), ["band", "slice"], "left_semi")
-    a = banded.alias("a")
-    b = banded.alias("b")
     # exact Hamming distance between hex strings, in-row: per hex digit,
     # popcount of xor — conv to int then bit_count
     ham = F.aggregate(
@@ -640,14 +620,6 @@ def simhash_candidates(
         F.lit(0),
         lambda acc, v: acc + v,
     )
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.slice") == F.col("b.slice"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"), ham.alias("hamming"))
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+    return _bucket_pairs(banded, ["band", "slice"], max_bucket_freq, ham.alias("hamming")).filter(
+        F.col("hamming") <= max_hamming
     )

@@ -41,18 +41,12 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from callysto_spark.operators.dedup import string_hash
+from callysto_spark.operators.dedup import spec_hash_sql, string_hash
 
 # 2^60 — the exclusive upper bound of the md5_60 hash range. 255 * 2^60
 # is exactly representable as an IEEE double (8-bit mantissa, exponent
 # 60), so both engines compute the estimator with identical FP ops.
 HASH_SPACE = float(1 << 60)
-
-
-def spec_hash_sql(expr: str) -> str:
-    """DuckDB SQL for the md5_60 spec hash of a VARCHAR expression —
-    must stay in lockstep with operators/dedup.py string_hash."""
-    return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
 
 
 def _bounded_topk(
@@ -128,7 +122,7 @@ def kmv_distinct(
     # __h rides the barrier_select Generate barrier (r15): _bounded_topk's
     # isNotNull guard otherwise pushes below this project and re-evaluates
     # the md5+conv hash per row in the filter as well as the projection
-    dh = barrier_select(df, *group, __h=string_hash(key, "md5_60")).distinct()
+    dh = barrier_select(df, *group, __h=string_hash(key)).distinct()
     topk = _bounded_topk(dh, group, "__h", k)
     kth = F.max("__h")
     est = F.when(F.count(F.lit(1)) < k, F.count(F.lit(1))).otherwise(
@@ -186,7 +180,7 @@ def bottom_k_sample(
     from callysto_spark.operators.util import barrier_select
 
     # same barrier rationale as kmv_distinct: one hash eval per row
-    withh = barrier_select(df, *df.columns, __h=string_hash(key, "md5_60"))
+    withh = barrier_select(df, *df.columns, __h=string_hash(key))
     return _bounded_topk(withh, group, "__h", k, tiebreak=[key.asc()])
 
 

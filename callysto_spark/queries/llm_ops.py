@@ -5,10 +5,10 @@ and embedding similarity search (brute-force top-k + blocked pairs).
 
 Oracle-parity notes: shingle construction, ratios and hashes are chosen
 so DuckDB can reproduce them bit-for-bit (int/int division, sha256,
-identical regex splits). The MinHash/SimHash/LSH registry queries run on
-the portable ``md5_60`` spec hash (operators/dedup.py ``string_hash``)
-so their DuckDB oracles can recompute every signature bit-for-bit;
-``xxhash64`` remains the production engine option on the same operators.
+identical regex splits). The MinHash/SimHash/LSH operators hash with
+the portable ``md5_60`` spec hash (operators/dedup.py ``string_hash``,
+twin ``spec_hash_sql``), so their DuckDB oracles recompute every
+signature bit-for-bit.
 """
 
 from __future__ import annotations
@@ -460,12 +460,11 @@ def doc_near_dup_survivor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # DuckDB oracle for the MinHash→LSH pipeline on the md5_60 spec hash.
 # The (a_i, b_i) permutation params come from the SAME generator as the
-# Spark side (operators/dedup.py _hash_params, seed 42) and are inlined
+# Spark side (operators/dedup.py _hash_params, _MINHASH_SEED) and are inlined
 # as a VALUES list, so both engines run the identical affine permutations
 # over the identical 60-bit shingle hashes.
-from callysto_spark.operators.dedup import _MERSENNE_P, _hash_params
+from callysto_spark.operators.dedup import _MERSENNE_P, _hash_params, spec_hash_sql
 
-_SPEC_HASH_SQL = "CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
 _MINHASH_PARAMS_SQL = ",".join(
     f"({i},{a},{b})" for i, (a, b) in enumerate(_hash_params(64))
 )
@@ -498,13 +497,13 @@ sh AS (SELECT doc, unnest(list_distinct(
          [array_to_string(toks[i:i+3], ' ')
           for i in range(1, greatest(length(toks) - 3, 1) + 1)])) AS g
        FROM toks),
-hs AS (SELECT doc, {_SPEC_HASH_SQL.format(expr="g")} % {_MERSENNE_P} AS h FROM sh),
+hs AS (SELECT doc, {spec_hash_sql("g")} % {_MERSENNE_P} AS h FROM sh),
 mins AS (SELECT doc, p.i, min((p.a * h + p.b) % {_MERSENNE_P}) AS m
          FROM hs CROSS JOIN params p GROUP BY doc, p.i),
 sig AS (SELECT doc, list(m ORDER BY i) AS signature FROM mins GROUP BY doc),
 banded AS (
   SELECT doc, bands.b AS band,
-         {_SPEC_HASH_SQL.format(expr="array_to_string(signature[4*bands.b+1 : 4*bands.b+4], ',')")} AS bh
+         {spec_hash_sql("array_to_string(signature[4*bands.b+1 : 4*bands.b+4], ',')")} AS bh
   FROM sig CROSS JOIN (SELECT unnest(range(0, 16)) AS b) bands
 ),
 bkeep AS (
@@ -527,15 +526,14 @@ cand AS (
 def doc_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(64) + LSH(16 bands × 4 rows) candidate pairs on the
     portable md5_60 spec hash, so the DuckDB oracle recomputes every
-    signature and band bucket bit-for-bit (full hash-checked row; the
-    xxhash64 production engine stays available on the same operators).
+    signature and band bucket bit-for-bit (full hash-checked row).
     Runs the 100 TB configuration: ``max_bucket_freq`` caps mega-bucket
     candidate output before the self-join, and the oracle applies the
     identical cap (r8 verdict item 4)."""
     d = load(spark, sf_dir, "documents")["documents"]
-    sigs = minhash_signatures(d, "doc_id", "text", num_hashes=64, n=4, hash_engine="md5_60")
+    sigs = minhash_signatures(d, "doc_id", "text", num_hashes=64, n=4)
     return minhash_lsh_candidates(
-        sigs, bands=16, rows_per_band=4, hash_engine="md5_60", max_bucket_freq=_LSH_BUCKET_CAP
+        sigs, bands=16, rows_per_band=4, max_bucket_freq=_LSH_BUCKET_CAP
     ).orderBy("doc_a", "doc_b")
 
 
@@ -613,10 +611,8 @@ def doc_lsh_verified_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select((F.col("doc_id") + 100000).alias("doc_id"), F.concat("text", F.lit(" planted")).alias("text"))
     )
     corpus = d.unionByName(twins)
-    sigs = minhash_signatures(corpus, "doc_id", "text", num_hashes=64, n=4, hash_engine="md5_60")
-    cands = minhash_lsh_candidates(
-        sigs, bands=16, rows_per_band=4, hash_engine="md5_60", max_bucket_freq=_LSH_BUCKET_CAP
-    )
+    sigs = minhash_signatures(corpus, "doc_id", "text", num_hashes=64, n=4)
+    cands = minhash_lsh_candidates(sigs, bands=16, rows_per_band=4, max_bucket_freq=_LSH_BUCKET_CAP)
     verified = verify_candidate_pairs(corpus, cands, "doc_id", "text", n=4, threshold=0.6)
     return verified.select("doc_a", "doc_b", "inter", "union_sz", "jaccard").orderBy(
         "doc_a", "doc_b"
@@ -629,7 +625,7 @@ def doc_lsh_verified_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH toks AS (
   SELECT doc_id AS doc, unnest({_TOKENS_SQL}) AS t FROM documents
 ),
-th AS (SELECT doc, {_SPEC_HASH_SQL.format(expr="t")} AS h FROM toks),
+th AS (SELECT doc, {spec_hash_sql("t")} AS h FROM toks),
 votes AS (
   SELECT doc, bs.bit,
          sum(CASE WHEN (h >> bs.bit) & 1 = 1 THEN 1 ELSE -1 END) AS v
@@ -658,7 +654,7 @@ def doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.py), the operator that does self-join, and is
     probe-measured there (SCALING.md)."""
     d = load(spark, sf_dir, "documents")["documents"]
-    return simhash(d, "doc_id", "text", hash_engine="md5_60")
+    return simhash(d, "doc_id", "text")
 
 
 # Shared by emb_cosine_topk and emb_cosine_topk_blas: the blas row

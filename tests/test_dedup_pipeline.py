@@ -28,6 +28,8 @@ def _planted_corpus(spark, sf_dir, n_twins=30):
 
 
 def test_lsh_recall_on_planted_near_dups(spark, sf_dir):
+    """Every planted one-token twin (~0.9 Jaccard) is a candidate pair
+    on the md5_60 hash the registry rows and their oracles run."""
     corpus, n_twins = _planted_corpus(spark, sf_dir)
     sigs = minhash_signatures(corpus, "doc_id", "text", num_hashes=64, n=4)
     cands = minhash_lsh_candidates(sigs, bands=16, rows_per_band=4)
@@ -91,33 +93,29 @@ def test_simhash_candidates_banded_hamming(spark):
 
 
 def test_md5_60_spec_hash_matches_hashlib(spark):
-    """The portable md5_60 engine (string_hash) is spec-defined: first
-    15 hex chars of the standard MD5 digest parsed as an int. Pin the
-    Spark expression against Python's hashlib so the DuckDB oracle, the
-    Spark side, and the written spec can never drift independently."""
+    """The md5_60 hash is spec-defined: first 15 hex chars of the
+    standard MD5 digest parsed as an int. Pin the Spark expression
+    (string_hash) and its DuckDB twin (spec_hash_sql) against Python's
+    hashlib on the same strings, so the oracle side, the Spark side and
+    the written spec can never drift independently."""
     import hashlib
 
-    from callysto_spark.operators.dedup import string_hash
+    import duckdb
+
+    from callysto_spark.operators.dedup import spec_hash_sql, string_hash
 
     vals = ["hello world", "", "a b c", "ünïcode tøkens", "planted"]
     df = spark.createDataFrame([(v,) for v in vals], ["s"])
-    got = {r["s"]: r["h"] for r in df.select("s", string_hash(F.col("s"), "md5_60").alias("h")).collect()}
+    got = {r["s"]: r["h"] for r in df.select("s", string_hash(F.col("s")).alias("h")).collect()}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t(s VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?)", [(v,) for v in vals])
+    got_sql = dict(con.execute(f"SELECT s, {spec_hash_sql('s')} FROM t").fetchall())
+    con.close()
     for v in vals:
         expect = int(hashlib.md5(v.encode("utf-8")).hexdigest()[:15], 16)
-        assert got[v] == expect, f"md5_60({v!r}): {got[v]} != {expect}"
-
-
-def test_lsh_recall_planted_md5_60_engine(spark, sf_dir):
-    """The md5_60 engine (the registry/oracle default) must keep the
-    same recall contract as xxhash64: every planted one-token twin is a
-    candidate pair."""
-    corpus, n_twins = _planted_corpus(spark, sf_dir)
-    sigs = minhash_signatures(corpus, "doc_id", "text", num_hashes=64, n=4, hash_engine="md5_60")
-    cands = minhash_lsh_candidates(sigs, bands=16, rows_per_band=4, hash_engine="md5_60")
-    planted = {(i, i + 100000) for i in range(n_twins)}
-    got = {(r["doc_a"], r["doc_b"]) for r in cands.collect()}
-    recall = len(planted & got) / len(planted)
-    assert recall >= 0.9, f"md5_60 LSH recall {recall} below contract"
+        assert got[v] == expect, f"Spark md5_60({v!r}): {got[v]} != {expect}"
+        assert got_sql[v] == expect, f"DuckDB md5_60({v!r}): {got_sql[v]} != {expect}"
 
 
 def test_md5_60_minhash_and_simhash_match_python_reference(spark):
@@ -160,7 +158,7 @@ def test_md5_60_minhash_and_simhash_match_python_reference(spark):
         want_sig[doc_id] = [min((a * h + b) % _MERSENNE_P for h in hs) for a, b in params]
     got_sig = {
         r["doc"]: list(r["signature"])
-        for r in minhash_signatures(df, "doc_id", "text", num_hashes=64, n=4, hash_engine="md5_60").collect()
+        for r in minhash_signatures(df, "doc_id", "text", num_hashes=64, n=4).collect()
     }
     assert got_sig == want_sig
 
@@ -176,7 +174,7 @@ def test_md5_60_minhash_and_simhash_match_python_reference(spark):
 
     got_sim = {
         r["doc"]: r["simhash"]
-        for r in simhash(df, "doc_id", "text", hash_engine="md5_60").collect()
+        for r in simhash(df, "doc_id", "text").collect()
     }
     want_sim = {doc_id: py_simhash(text) for doc_id, text in docs}
     assert got_sim == want_sim
@@ -255,9 +253,11 @@ def test_simhash_bucket_cap_drops_template_cluster(spark):
     ]
     df = spark.createDataFrame(docs, ["doc_id", "text"]).repartition(4)
     sims = simhash(df, "doc_id", "text")
+    # the twins' md5_60 simhashes are 4 bits apart, so 8 bands (recall
+    # guaranteed up to hamming 7) rather than 4 (up to 3)
     capped = {
         (r["doc_a"], r["doc_b"])
-        for r in simhash_candidates(sims, bands=4, max_hamming=3, max_bucket_freq=4).collect()
+        for r in simhash_candidates(sims, bands=8, max_hamming=4, max_bucket_freq=4).collect()
     }
     assert (100, 101) in capped, "size-2 twin buckets must survive the cap"
     assert not any(a < 100 and b < 100 for a, b in capped), f"cluster pairs leaked: {capped}"
@@ -331,18 +331,16 @@ def test_lsh_banding_cap_semantics_match_python_reference(spark):
                 want_capped |= pairs
 
         df = spark.createDataFrame(docs, ["doc_id", "text"]).repartition(3)
-        sigs = minhash_signatures(df, "doc_id", "text", num_hashes=32, n=4, hash_engine="md5_60")
+        sigs = minhash_signatures(df, "doc_id", "text", num_hashes=32, n=4)
         got_capped = {
             (r["doc_a"], r["doc_b"])
             for r in minhash_lsh_candidates(
-                sigs, bands=8, rows_per_band=4, hash_engine="md5_60", max_bucket_freq=cap
+                sigs, bands=8, rows_per_band=4, max_bucket_freq=cap
             ).collect()
         }
         got_uncapped = {
             (r["doc_a"], r["doc_b"])
-            for r in minhash_lsh_candidates(
-                sigs, bands=8, rows_per_band=4, hash_engine="md5_60"
-            ).collect()
+            for r in minhash_lsh_candidates(sigs, bands=8, rows_per_band=4).collect()
         }
         assert got_capped == want_capped, f"cap={cap}: {got_capped ^ want_capped}"
         assert got_uncapped == want_uncapped

@@ -202,12 +202,12 @@ def test_deciles_no_global_window_funnel(spark, sf_dir):
 def test_jaccard_capped_prunes_candidate_pairs(spark, sf_dir):
     """The stop-shingle cap must strictly reduce candidate pairs vs the
     uncapped self-join (the near-linear-at-scale contract)."""
-    from callysto_spark.operators.dedup import shingle_rows
+    from callysto_spark.operators.dedup import shingle_arrays
     from callysto_spark.tables import load as load_tables
     from pyspark.sql import functions as F
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    sh = shingle_rows(d, "doc_id", "text", 4)
+    sh = shingle_arrays(d, "doc_id", "text", 4).select("doc", F.explode("gs").alias("g"))
     freq = sh.groupBy("g").agg(F.count("*").alias("df_"))
     stats = freq.agg(
         F.sum(F.col("df_") * (F.col("df_") - 1) / 2).alias("p"), F.max("df_").alias("mx")
@@ -267,12 +267,9 @@ def test_minhash_signatures_no_hash_exchange(spark, sf_dir):
     from callysto_spark.tables import load as load_tables
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    for engine in ("xxhash64", "md5_60"):
-        plan = physical_plan(
-            minhash_signatures(d, "doc_id", "text", num_hashes=16, n=4, hash_engine=engine)
-        )
-        assert "hashpartitioning" not in plan.lower(), f"{engine}: {plan}"
-        assert "Window" not in plan, f"{engine}: no window in the shingle pipeline"
+    plan = physical_plan(minhash_signatures(d, "doc_id", "text", num_hashes=16, n=4))
+    assert "hashpartitioning" not in plan.lower(), plan
+    assert "Window" not in plan, "no window in the shingle pipeline"
 
 
 def test_lsh_banding_capped_plan_shape(spark, sf_dir):
@@ -289,10 +286,8 @@ def test_lsh_banding_capped_plan_shape(spark, sf_dir):
     from callysto_spark.tables import load as load_tables
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    sigs = minhash_signatures(d, "doc_id", "text", num_hashes=64, n=4, hash_engine="md5_60")
-    cands = minhash_lsh_candidates(
-        sigs, bands=16, rows_per_band=4, hash_engine="md5_60", max_bucket_freq=64
-    )
+    sigs = minhash_signatures(d, "doc_id", "text", num_hashes=64, n=4)
+    cands = minhash_lsh_candidates(sigs, bands=16, rows_per_band=4, max_bucket_freq=64)
     plan = physical_plan(cands)
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     opt = cands._jdf.queryExecution().optimizedPlan()

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
-from callysto_spark.operators.dedup import with_shingles
+from callysto_spark.operators.dedup import shingle_arrays
 from callysto_spark.operators.relational import global_ntile, global_rank
 from callysto_spark.tables import load
 
@@ -186,7 +186,7 @@ def test_word_shingles_short_doc_no_ansi_crash(spark):
     df = spark.createDataFrame(
         [(1, "two tokens"), (2, "a"), (3, "four small word doc here")], ["doc_id", "text"]
     )
-    rows = {r["doc_id"]: r["gs"] for r in with_shingles(df, "text", n=4).collect()}
+    rows = {r["doc"]: r["gs"] for r in shingle_arrays(df, "doc_id", "text", n=4).collect()}
     assert rows[1] == ["two tokens"]
     assert rows[2] == ["a"]
     assert rows[3][0] == "four small word doc"
@@ -198,8 +198,6 @@ def test_shingle_arrays_edge_cases(spark):
     the regex-split convention, shared with DuckDB string_split_regex),
     repeated tokens (distinct shingles), multi-whitespace runs, and the
     Generate-barrier path evaluating the split once per doc."""
-    from callysto_spark.operators.dedup import shingle_arrays, shingle_rows
-
     df = spark.createDataFrame(
         [
             (1, ""),
@@ -215,7 +213,12 @@ def test_shingle_arrays_edge_cases(spark):
     assert arr[3] == ["x y z w", "y z w q"]  # whitespace runs = single separators
     assert arr[4] == ["one two three four", "two three four five"]
     # rows form matches arrays form exactly
-    rows = {(r["doc"], r["g"]) for r in shingle_rows(df, "doc_id", "text", 4).collect()}
+    rows = {
+        (r["doc"], r["g"])
+        for r in shingle_arrays(df, "doc_id", "text", 4)
+        .select("doc", F.explode("gs").alias("g"))
+        .collect()
+    }
     assert rows == {(d, g) for d, gs in arr.items() for g in gs}
 
 

@@ -67,7 +67,7 @@ def test_kmv_mergeable(spark):
     def survivors(part):
         dh = part.select("g", F.col("key")).select(
             "g",
-            string_hash(F.col("key"), "md5_60").alias("__h"),
+            string_hash(F.col("key")).alias("__h"),
         ).distinct()
         return _bounded_topk(dh, ["g"], "__h", 128)
 
@@ -322,10 +322,10 @@ def test_kmv_global_group_plan_bounded(spark, sf_dir):
     global sort on one reducer (all distinct keys into one task) — the
     exact concentration the r9 verdict told us to rule out — and this
     pin fails before SCALING.md finds out the slow way."""
-    from callysto_spark.operators.dedup import shingle_rows
+    from callysto_spark.operators.dedup import shingle_arrays
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    sh = shingle_rows(d, "doc_id", "text", n=4)
+    sh = shingle_arrays(d, "doc_id", "text", n=4).select("doc", F.explode("gs").alias("g"))
     df = kmv_distinct(
         sh.select(F.lit("all").alias("scope"), "g"), ["scope"], F.col("g"), k=256
     )
