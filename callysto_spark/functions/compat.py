@@ -42,7 +42,7 @@ def rnd(col: Column | str, n: int) -> Column:
     return F.when(in_range, F.floor(pre) / scale).otherwise(c)
 
 
-def fixed_sum(col: Column | str, scale: int = 100, guard: bool = True) -> Column:
+def fixed_sum(col: Column | str, scale: int = 100) -> Column:
     """Order-independent deterministic sum of a double expression.
 
     Each ROW is rounded to a scaled integer (identical per-row doubles ⇒
@@ -53,18 +53,9 @@ def fixed_sum(col: Column | str, scale: int = 100, guard: bool = True) -> Column
     crashed on (see the in-range CASE below). Bit-identical across
     engines and partitionings at ANY row count. Oracle-side macro:
     MSUM(x) / FSUM(x, scale) (see rewrite_oracle_fixed).
-
-    ``guard=False`` drops the per-row range CASE — the named cost of the
-    r5 robustness contract (one abs-compare + branch per row per
-    aggregate; ≲0.05s across q1's five fixed sums at sf0.1). Opt out
-    ONLY for columns whose finiteness a prior stage already pinned; on
-    raw data one 1e308/NaN row would overflow the int64 sum or abort
-    the job under ANSI mode.
     """
     c = F.col(col) if isinstance(col, str) else col
     pre = c * F.lit(float(scale)) + F.lit(0.5)
-    if not guard:
-        return F.sum(F.floor(pre)) / F.lit(float(scale))
     # Robustness contract: rows whose scaled value is non-finite (NaN,
     # ±Inf) or beyond ±2^53 are EXCLUDED (NULL) — fixed-point cannot
     # represent them, and ranking them through would overflow the int64

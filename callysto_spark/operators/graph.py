@@ -72,7 +72,10 @@ def connected_components(
         new_labels = _propagate_round(sym, labels).localCheckpoint(
             eager=True
         )  # materialize + truncate lineage
-        changed = new_labels.where("chg").limit(1).count()
+        # a plain count, not limit(1)/isEmpty/first/take: Spark names
+        # each planned limit's counter from a JVM-wide sequence, so every
+        # round would generate (and cache) new code
+        changed = new_labels.where("chg").count()
         if prev is not None:
             # new_labels' lineage was truncated, so releasing the previous
             # checkpoint cannot orphan any downstream recompute path.

@@ -129,7 +129,7 @@ def barrier_select(df: DataFrame, *keep, **named) -> DataFrame:
     )
 
 
-def ensure_parallelism(df: DataFrame, min_files: int | None = None) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Repartition when the input is a small file scan.
 
     Small single-file tables read as 1 partition and serialize every
@@ -140,7 +140,7 @@ def ensure_parallelism(df: DataFrame, min_files: int | None = None) -> DataFrame
     """
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    threshold = min_files if min_files is not None else max(2, target // 2)
+    threshold = max(2, target // 2)
     try:
         n_files = len(df.inputFiles())
     except Exception:

@@ -100,3 +100,14 @@ def test_warm_bench_pass_compiles_no_classes(spark, sf_dir):
     bench = [name for name, q in sorted(registry.items()) if q.bench]
     counts = codegen_counts(spark, registry, bench, sf_dir)
     assert sum(second for _, second in counts.values()) < 20, counts
+
+
+def test_near_dup_components_warm_pass_compiles_no_classes(spark, sf_dir):
+    # connected_components once probed convergence with limit(1).count():
+    # Spark names each planned limit's counter from a JVM-wide sequence, so
+    # every propagation round generated new code, and these two rows
+    # compiled 6 classes each on every warm run at sf0.001.
+    registry = load_all()
+    names = ["doc_near_dup_components", "doc_near_dup_survivor_stats"]
+    counts = codegen_counts(spark, registry, names, sf_dir)
+    assert [second for _, second in counts.values()] == [0, 0], counts
