@@ -22,13 +22,17 @@ def physical_plan(df: DataFrame, mode: str = "formatted") -> str:
 
 
 def pushed_filters(df: DataFrame) -> list[str]:
-    """All PushedFilters lists in the scan nodes (empty strings removed).
+    """All PushedFilters entries in the scan nodes of ``df``'s plan."""
+    return pushed_filters_in(physical_plan(df))
+
+
+def pushed_filters_in(plan: str) -> list[str]:
+    """All PushedFilters entries in a plan's text (empty strings removed).
 
     Parsed depth-aware: a naive comma split would fragment binary
     filters (``GreaterThan(a,5)`` → two bogus entries) and a
     first-``]`` capture would truncate at ``In(a, [1,2,3])``'s inner
     bracket, dropping the rest of the list (r7 review)."""
-    plan = physical_plan(df)
     out: list[str] = []
     marker = "PushedFilters: ["
     i = 0

@@ -50,18 +50,20 @@ def test_fsum_with_scale_expands():
     assert "1000.0" in out and "floor" in out and "FSUM" not in out
 
 
+_PUSHED_PLAN = (
+    "(1) Scan parquet\n"
+    "PushedFilters: [IsNotNull(a), GreaterThan(a,5), In(b, [1,2,3])]\n"
+    "(2) Scan parquet\n"
+    "PushedFilters: []\n"
+    "(3) Scan parquet\n"
+    "PushedFilters: [EqualTo(c,7)]\n"
+)
+
+
 def test_pushed_filters_depth_aware(monkeypatch):
     from callysto_spark.plans import audit
 
-    plan_text = (
-        "(1) Scan parquet\n"
-        "PushedFilters: [IsNotNull(a), GreaterThan(a,5), In(b, [1,2,3])]\n"
-        "(2) Scan parquet\n"
-        "PushedFilters: []\n"
-        "(3) Scan parquet\n"
-        "PushedFilters: [EqualTo(c,7)]\n"
-    )
-    monkeypatch.setattr(audit, "physical_plan", lambda df, mode="formatted": plan_text)
+    monkeypatch.setattr(audit, "physical_plan", lambda df, mode="formatted": _PUSHED_PLAN)
     # a naive comma split fragments GreaterThan(a,5); a first-']'
     # capture truncates at In's inner bracket and DROPS EqualTo entirely
     assert audit.pushed_filters(None) == [
@@ -70,6 +72,13 @@ def test_pushed_filters_depth_aware(monkeypatch):
         "In(b, [1,2,3])",
         "EqualTo(c,7)",
     ]
+
+
+def test_plan_summary_counts_whole_pushed_filters():
+    # the plan ledger's count goes through the same depth-aware parser
+    from tools.opt_measure import plan_summary
+
+    assert plan_summary(_PUSHED_PLAN).endswith(" pushed_filters=4")
 
 
 def test_exchange_count_excludes_reused(monkeypatch):

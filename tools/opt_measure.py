@@ -29,6 +29,7 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from callysto_spark.plans.audit import pushed_filters_in
 from callysto_spark.queries import load_all
 from callysto_spark.session import get_spark
 
@@ -46,8 +47,7 @@ def plan_summary(text: str) -> str:
     n_ex = len(re.findall(r"^\(\d+\) Exchange", text, re.M))
     joins = re.findall(r"^\(\d+\) (BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct)", text, re.M)
     pyev = re.findall(r"^\(\d+\) (BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas)", text, re.M)
-    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", text)
-    pushed_n = sum(1 for p in pushed for f in p.split(",") if f.strip())
+    pushed_n = len(pushed_filters_in(text))
     from collections import Counter
     jc = ",".join(f"{k}x{v}" for k, v in sorted(Counter(joins).items()))
     pc = ",".join(f"{k}x{v}" for k, v in sorted(Counter(pyev).items()))
