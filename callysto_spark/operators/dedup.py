@@ -27,10 +27,8 @@ the r15 duplicate-row sweep — see tests/test_dup_fuzz.py).
 
 from __future__ import annotations
 
-import operator
 import random
 from collections.abc import Sequence
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
@@ -225,23 +223,25 @@ def _cap_buckets(rows: DataFrame, keys: list[str], cap: int) -> DataFrame:
     return rows.join(live.hint("shuffle_hash"), keys, "left_semi")
 
 
-def _bucket_pairs(
-    banded: DataFrame, keys: list[str], cap: int | None, *extra: Column
-) -> DataFrame:
+def _bucket_pairs(banded: DataFrame, bucket: str, cap: int | None, *extra: Column) -> DataFrame:
     """Distinct (doc_a, doc_b, *extra) pairs, doc_a < doc_b, of docs
-    sharing a (band, bucket) row of ``banded`` — the banding self-join
-    of LSH and SimHash candidates. ``banded`` is persisted (it feeds
-    both join sides, and the cap's count pass) and, when ``cap`` is set,
-    first pruned to buckets of 2..cap members (``_cap_buckets``).
+    sharing a (band, ``bucket``) row of ``banded`` — the banding
+    self-join of LSH and SimHash candidates. ``banded`` is persisted (it
+    feeds both join sides, and the cap's count pass) and, when ``cap``
+    is set, first pruned to buckets of 2..cap members (``_cap_buckets``).
     ``extra`` columns may reference both sides as ``a.*`` / ``b.*``."""
     banded = transient_persist(banded)
     if cap is not None:
-        banded = _cap_buckets(banded, keys, cap)
+        banded = _cap_buckets(banded, ["band", bucket], cap)
     a = banded.alias("a")
     b = banded.alias("b")
-    same_bucket = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
     return (
-        a.join(b, reduce(operator.and_, same_bucket) & (F.col("a.doc") < F.col("b.doc")))
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col(f"a.{bucket}") == F.col(f"b.{bucket}"))
+            & (F.col("a.doc") < F.col("b.doc")),
+        )
         .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"), *extra)
         .distinct()
     )
@@ -520,7 +520,7 @@ def minhash_lsh_candidates(
             )
         ).alias("bk"),
     ).select("doc", F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
-    return _bucket_pairs(banded, ["band", "bh"], max_bucket_freq)
+    return _bucket_pairs(banded, "bh", max_bucket_freq)
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -620,6 +620,6 @@ def simhash_candidates(
         F.lit(0),
         lambda acc, v: acc + v,
     )
-    return _bucket_pairs(banded, ["band", "slice"], max_bucket_freq, ham.alias("hamming")).filter(
+    return _bucket_pairs(banded, "slice", max_bucket_freq, ham.alias("hamming")).filter(
         F.col("hamming") <= max_hamming
     )
