@@ -113,9 +113,9 @@ def word_shingles(toks: Column, n: int) -> Column:
     """Distinct word n-gram shingles from a MATERIALIZED tokens column.
 
     The tokens argument must be a genuine attribute (use
-    ``shingle_arrays``): a lambda that references an
-    inline expression (e.g. the regex split itself) re-evaluates it per
-    element — measured 12× slower on the documents table.
+    ``shingle_arrays``): a lambda that references an inline expression
+    (e.g. the regex split itself) re-evaluates it per element —
+    measured 12× slower on the documents table.
     """
     # Unrolled element_at instead of slice(): per-element array slicing
     # measured ~50× slower than n direct element accesses. try_element_at
@@ -469,7 +469,8 @@ def minhash_lsh_candidates(
     (band_idx, band_hash) — high-cardinality buckets, so the shuffle is
     balanced; a hot bucket (boilerplate docs) is exactly the skew AQE
     splits. The band hash is the same ``string_hash`` as the signatures
-    (comma-joined band values as the input string). Output: distinct (doc_a, doc_b).
+    (comma-joined band values as the input string). Output: distinct
+    (doc_a, doc_b).
 
     ``max_bucket_freq`` (the 100 TB knob): a bucket shared by m docs
     emits C(m, 2) pairs — a template cluster of 1M near-identical docs

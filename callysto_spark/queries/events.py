@@ -302,11 +302,11 @@ def _quantile_sketch_oracle() -> str:
     """Composed from the SAME spec helpers the Spark side uses
     (operators/dedup.py spec_hash_sql, operators/sketches.py
     kmv_distinct_sql), so a future change to the spec hash or KMV
-    estimator cannot leave this oracle silently stale. NULL handling and tie-breaks mirror the
-    operators exactly: NULL sample keys excluded before ranking, hash
-    ties broken by the key itself, NULL values excluded before the
-    quantile ranking (m counts non-null only), NULL users ignored by
-    the KMV sketch."""
+    estimator cannot leave this oracle silently stale. NULL handling
+    and tie-breaks mirror the operators exactly: NULL sample keys
+    excluded before ranking, hash ties broken by the key itself, NULL
+    values excluded before the quantile ranking (m counts non-null
+    only), NULL users ignored by the KMV sketch."""
     from callysto_spark.operators.dedup import spec_hash_sql
     from callysto_spark.operators.sketches import kmv_distinct_sql
 

@@ -103,11 +103,15 @@ def test_warm_bench_pass_compiles_no_classes(spark, sf_dir):
 
 
 def test_near_dup_components_warm_pass_compiles_no_classes(spark, sf_dir):
-    # connected_components once probed convergence with limit(1).count():
-    # Spark names each planned limit's counter from a JVM-wide sequence, so
-    # every propagation round generated new code, and these two rows
-    # compiled 6 classes each on every warm run at sf0.001.
+    # connected_components must probe convergence without planning a limit
+    # (limit/isEmpty/first/take): Spark names each limit's counter from a
+    # JVM-wide sequence, so such a probe generates new code every
+    # propagation round (6 classes per row per warm run at sf0.001). The
+    # stage-numbering race above can add a few classes to one warm pass
+    # but does not repeat, so each row needs one clean pass out of three.
     registry = load_all()
     names = ["doc_near_dup_components", "doc_near_dup_survivor_stats"]
-    counts = codegen_counts(spark, registry, names, sf_dir)
-    assert [second for _, second in counts.values()] == [0, 0], counts
+    warm = codegen_counts(spark, registry, names, sf_dir)
+    again = codegen_counts(spark, registry, names, sf_dir)
+    passes = {name: warm[name][1:] + again[name] for name in names}
+    assert all(0 in counts for counts in passes.values()), passes
