@@ -118,6 +118,21 @@ def test_md5_60_spec_hash_matches_hashlib(spark):
         assert got_sql[v] == expect, f"DuckDB md5_60({v!r}): {got_sql[v]} != {expect}"
 
 
+def test_lsh_recall_planted_md5_60_engine(spark, sf_dir):
+    """The md5_60 LSH as the registry runs it (doc_minhash_lsh_pairs:
+    the shared mega-bucket cap on) keeps the recall contract: the cap
+    drops boilerplate buckets, never a planted one-token twin's."""
+    from callysto_spark.queries.llm_ops import _LSH_BUCKET_CAP
+
+    corpus, n_twins = _planted_corpus(spark, sf_dir)
+    sigs = minhash_signatures(corpus, "doc_id", "text", num_hashes=64, n=4)
+    cands = minhash_lsh_candidates(sigs, bands=16, rows_per_band=4, max_bucket_freq=_LSH_BUCKET_CAP)
+    planted = {(i, i + 100000) for i in range(n_twins)}
+    got = {(r["doc_a"], r["doc_b"]) for r in cands.collect()}
+    recall = len(planted & got) / len(planted)
+    assert recall >= 0.9, f"md5_60 LSH recall {recall} below contract"
+
+
 def test_md5_60_minhash_and_simhash_match_python_reference(spark):
     """Third-implementation parity: recompute MinHash signatures and
     SimHash hex digests in pure Python (hashlib + the published spec:
