@@ -2,17 +2,17 @@
 Streaming.
 
 Parity map (reference → here), per SURVEY.md §2:
-- `app.agent(name, topic, closure)` (reference `callysto/src/app.rs:284-300`,
-  `types/agent.rs:27-91`) → :meth:`App.agent`: a streaming query whose
-  closure receives each micro-batch as a DataFrame (``foreachBatch``).
-- `app.flow(name, source, closure)` (`app.rs:340-359`, `types/flows.rs:82-219`)
-  → :meth:`App.flow`: a declarative DataFrame transform + sink.
-- `app.table(name)` (`app.rs:573-590`, `types/table.rs`) → :meth:`App.table`
-  (see callysto_spark.streaming.state): keyed state on GroupState, one
-  group per hash bucket of keys; durability via checkpoint instead of a
-  changelog topic (recovery = automatic, reference `runtime/recovery.rs`).
-  :meth:`App.table_agent` binds a closure to it through that one
-  GroupState binding (reference `types/table_agent.rs:26-103`).
+- agents, table agents and flows (reference `app.rs:284-359`,
+  `types/agent.rs`, `types/table_agent.rs`, `types/flows.rs`) are one
+  stream record here: source → transform → sink, started as one
+  Structured Streaming query with a checkpoint, in one name space.
+  :meth:`App.agent`'s closure is the ``foreachBatch`` sink and gets each
+  micro-batch as a DataFrame; :meth:`App.table_agent`'s transform binds
+  the closure to an :meth:`App.table` through GroupState (one group per
+  hash bucket of keys, see callysto_spark.streaming.state);
+  :meth:`App.flow` is a declarative transform + sink. No sink means a
+  memory sink (test surface, no recovery). Durability is the
+  checkpoint's, not a changelog topic's (reference `runtime/recovery.rs`).
 - `app.task` / `app.timer` (`app.rs:243-271`) → driver threads.
 - `app.run()` (`app.rs:644-880`) → start all queries + await.
 - app-wide shared state (`app.rs:103-107`: instance-local, not
@@ -30,6 +30,7 @@ idempotent sink gives end-to-end exactly-once per query.
 from __future__ import annotations
 
 import os
+import tempfile
 import threading
 import time
 from collections.abc import Callable
@@ -98,27 +99,20 @@ class Context:
 
 
 @dataclass
-class _Agent:
-    """A registered agent. ``stateful`` marks a table agent: ``fn`` is then
-    the bound plan builder (DataFrame → DataFrame) and ``sink`` its
-    durable foreachBatch writer (``None`` → memory sink)."""
+class _Stream:
+    """A registered agent, table agent or flow: ``source`` →
+    ``transform`` → ``sink``. ``sink`` is a ``(df, batch_id)`` writer;
+    ``None`` sends the results to the memory sink ``memory_name``.
+    ``kind`` ("agent" or "flow") only labels it on the ops page."""
 
-    name: str
-    source: SourceSpec
-    fn: Callable[..., Any]
-    trigger: dict[str, Any] | None = None
-    stateful: bool = False
-    sink: Callable | None = None
-
-
-@dataclass
-class _Flow:
     name: str
     source: SourceSpec
     transform: Callable[[DataFrame], DataFrame]
-    sink: Callable[[DataFrame], Any] | None = None
-    collect_to: str | None = None  # memory sink query name
-    output_mode: str = "append"  # aggregating flows need update/complete
+    sink: Callable[[DataFrame, int], Any] | None
+    memory_name: str | None = None
+    output_mode: str = "append"
+    trigger: dict[str, Any] | None = None  # None → {"availableNow": True}
+    kind: str = "agent"
 
 
 class App:
@@ -140,17 +134,16 @@ class App:
             self.spark.conf.set(k, v)
         self.checkpoint_root = checkpoint_root or f"/tmp/callysto_spark/{name}/checkpoints"
         self.state: dict[str, Any] = {}
-        self._agents: dict[str, _Agent] = {}
-        self._flows: dict[str, _Flow] = {}
+        self._streams: dict[str, _Stream] = {}
         self._tables: dict[str, Any] = {}
         self._tasks: list[Callable[[Context], Any]] = []
         self._timers: list[tuple[float, Callable[[Context], Any]]] = []
         self._services: list[tuple[Callable[[Context, threading.Event], Any], list[Callable]]] = []
         self._service_start_order: list[str] = []
         self._queries: list[Any] = []
-        self._query_owner: dict[str, str] = {}  # query id → agent/flow name
+        self._query_owner: dict[str, str] = {}  # query id → stream name
         self._failures: list[tuple[str | None, str]] = []  # (owner, exception text)
-        # agents the user stopped explicitly — the supervision monitor must
+        # streams the user stopped explicitly — the supervision monitor must
         # never resurrect these, even if the stop raced a crash
         self._stopped_agents: set[str] = set()
         self._supervised = False  # set by enable_auto_restart
@@ -186,6 +179,15 @@ class App:
         return SourceSpec.dataframe(spec_or_df)
 
     # ------------------------------------------------------------ register
+    def _add(self, stream: _Stream) -> None:
+        if stream.name in self._streams:
+            raise ValueError(
+                f"a stream named {stream.name!r} is already registered; agents, "
+                "table agents and flows share one name space (one checkpoint "
+                "directory and query name per name)"
+            )
+        self._streams[stream.name] = stream
+
     def agent(
         self,
         name: str,
@@ -199,7 +201,13 @@ class App:
         ``DataStreamWriter.trigger`` (default ``{"availableNow": True}``)."""
 
         def deco(fn: Callable[[DataFrame, Context], Any]):
-            self._agents[name] = _Agent(name, self.source(source), fn, trigger)
+            ctx = Context(self, name)
+
+            def process(batch_df: DataFrame, batch_id: int) -> None:
+                ctx.batch_id = batch_id
+                fn(batch_df, ctx)
+
+            self._add(_Stream(name, self.source(source), lambda df: df, process, trigger=trigger))
             return fn
 
         return deco
@@ -214,14 +222,20 @@ class App:
         output_mode: str = "append",
     ):
         """Register a declarative transform over a source. ``collect_to``
-        routes results to an in-memory sink (query name = view name).
+        routes results to an in-memory sink (query name = view name) when
+        there is no ``sink``; with neither, results are dropped.
         ``output_mode``: a flow whose transform contains a streaming
         aggregation needs ``"update"`` or ``"complete"`` — append mode
         rejects unwatermarked streaming aggs at start."""
 
+        if sink is not None:
+            writer = _as_foreach_batch(sink)
+        else:  # collect_to → memory sink; neither → results are dropped
+            writer = None if collect_to else (lambda b, i: None)
+
         def deco(fn: Callable[[DataFrame], DataFrame]):
-            self._flows[name] = _Flow(
-                name, self.source(source), fn, sink, collect_to, output_mode
+            self._add(
+                _Stream(name, self.source(source), fn, writer, collect_to, output_mode, kind="flow")
             )
             return fn
 
@@ -251,7 +265,7 @@ class App:
         sink: Callable | None = None,
         trigger: dict[str, Any] | None = None,
     ):
-        """Register a stateful processor (reference `types/table_agent.rs`):
+        """Register a keyed-state processor (reference `types/table_agent.rs`):
         closure runs per key with get/set/del on the table's state.
 
         Bound through GroupState (streaming/state.py): grouped physically
@@ -267,9 +281,16 @@ class App:
         def deco(fn):
             from callysto_spark.streaming.state import bind_table_agent
 
-            bound = bind_table_agent(table, fn, timeout=timeout)
-            self._agents[name] = _Agent(
-                name, self.source(source), bound, trigger, stateful=True, sink=sink
+            self._add(
+                _Stream(
+                    name,
+                    self.source(source),
+                    bind_table_agent(table, fn, timeout=timeout),
+                    _as_foreach_batch(sink) if sink is not None else None,
+                    _identifier(f"{self.name}_{name}"),
+                    "update",  # bind_table_agent emits update-mode output only
+                    trigger,
+                )
             )
             return fn
 
@@ -341,115 +362,58 @@ class App:
         return ordered
 
     # ----------------------------------------------------------------- run
-    def _register_query(self, q: Any, owner: str) -> None:
-        """Track query → owning agent/flow by query id, so supervision
-        and stop_agent never depend on name matching (foreachBatch
-        queries historically had name=None — the silent-failure bug)."""
-        self._queries.append(q)
-        self._query_owner[str(q.id)] = owner
-
-    def _start_agent(self, agent: _Agent) -> None:
-        ctx = Context(self, agent.name)
+    def _start(self, stream: _Stream) -> None:
+        """Start one stream. A batch source gets one pass (reference flow
+        example with stream::iter): the sink is called with batch id -1,
+        or the result becomes the temp view ``memory_name``. A streaming
+        source becomes one query."""
         # Python DataSource streams fall back to single-batch availableNow,
         # so a per-trigger admission cap would silently leave backlog
         # unprocessed when the one batch "drains": reject the combination.
-        trigger = {"availableNow": True} if agent.trigger is None else agent.trigger
-        src_opts = getattr(agent.source, "options", {}) or {}
-        has_cap = any(k.lower() == "maxrecordspertrigger" for k in src_opts)
-        if trigger.get("availableNow") and agent.source.kind == "memtopic" and has_cap:
+        trigger = {"availableNow": True} if stream.trigger is None else stream.trigger
+        has_cap = any(k.lower() == "maxrecordspertrigger" for k in stream.source.options)
+        if trigger.get("availableNow") and stream.source.kind == "memtopic" and has_cap:
             raise ValueError(
-                f"agent {agent.name!r}: maxRecordsPerTrigger on a memtopic source is "
+                f"stream {stream.name!r}: maxRecordsPerTrigger on a memtopic source is "
                 "incompatible with the availableNow trigger (Python DataSource "
                 "streams run availableNow as a SINGLE batch, so the cap truncates "
                 "the drain). Use trigger={'processingTime': '...'} with the cap, "
                 "or drop maxRecordsPerTrigger to drain fully."
             )
-        df = agent.source.load(self.spark)
-        qname = _identifier(f"{self.name}_{agent.name}")
-        if agent.stateful:
-            df = agent.fn(df)  # bound stateful transform builds the plan
-            # bind_table_agent emits update-mode output only
-            writer = df.writeStream.outputMode("update")
-            if agent.sink is not None:
-                # durable sink → checkpoint recovery works across restarts
-                writer = writer.foreachBatch(_as_foreach_batch(agent.sink))
-                ckpt = f"{self.checkpoint_root}/{agent.name}"
-            else:
-                # memory sink: test convenience only. Spark memory sinks
-                # (append/update mode) REFUSE checkpoint recovery, so a
-                # persistent location would make every rerun/auto-restart
-                # throw AnalysisException — use an ephemeral one instead
-                # (state starts fresh; that is the memory sink's contract).
-                import tempfile
-
-                writer = writer.format("memory")
-                ckpt = tempfile.mkdtemp(prefix=f"callysto_mem_{agent.name}_")
-                self._ephemeral_dirs.append(ckpt)
-            q = (
-                writer.queryName(qname)
-                .option("checkpointLocation", ckpt)
-                .trigger(**trigger)
-                .start()
-            )
-            self._register_query(q, agent.name)
-            return
-        if df.isStreaming:
-
-            def process(batch_df: DataFrame, batch_id: int) -> None:
-                ctx.batch_id = batch_id
-                agent.fn(batch_df, ctx)
-
-            q = (
-                df.writeStream.foreachBatch(process)
-                .queryName(qname)
-                .option("checkpointLocation", f"{self.checkpoint_root}/{agent.name}")
-                .trigger(**trigger)
-                .start()
-            )
-            self._register_query(q, agent.name)
-        else:
-            # Finite source (reference flow example with stream::iter):
-            # run the closure once over the whole batch.
-            agent.fn(df, ctx)
-
-    def _start_flow(self, flow: _Flow) -> None:
-        df = flow.transform(flow.source.load(self.spark))
+        df = stream.transform(stream.source.load(self.spark))
         if not df.isStreaming:
-            if flow.sink:
-                flow.sink(df)
-            elif flow.collect_to:
-                df.createOrReplaceTempView(flow.collect_to)
+            if stream.sink is not None:
+                stream.sink(df, -1)
+            else:
+                df.createOrReplaceTempView(stream.memory_name)
             return
-        if flow.collect_to:
-            # memory sink → ephemeral checkpoint (no recovery support;
-            # a persistent location would break every rerun)
-            import tempfile
-
-            ckpt = tempfile.mkdtemp(prefix=f"callysto_mem_{flow.name}_")
-            self._ephemeral_dirs.append(ckpt)
-            q = (
-                df.writeStream.outputMode(flow.output_mode)
-                .format("memory")
-                .queryName(flow.collect_to)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
+        writer = df.writeStream.outputMode(stream.output_mode)
+        if stream.sink is not None:
+            # durable sink → checkpoint recovery works across restarts
+            writer = writer.foreachBatch(stream.sink)
+            qname = _identifier(f"{self.name}_{stream.name}")
+            ckpt = f"{self.checkpoint_root}/{stream.name}"
         else:
-            sink_fn = _as_foreach_batch(flow.sink) if flow.sink else (lambda b, i: None)
-            q = (
-                df.writeStream.outputMode(flow.output_mode)
-                .foreachBatch(sink_fn)
-                .queryName(_identifier(f"{self.name}_{flow.name}"))
-                .option("checkpointLocation", f"{self.checkpoint_root}/{flow.name}")
-                .trigger(availableNow=True)
-                .start()
-            )
-        self._register_query(q, flow.name)
+            # memory sink: test convenience only. Spark memory sinks
+            # (append/update mode) REFUSE checkpoint recovery, so a
+            # persistent location would make every rerun/auto-restart
+            # throw AnalysisException — use an ephemeral one instead
+            # (state starts fresh; that is the memory sink's contract).
+            writer = writer.format("memory")
+            qname = stream.memory_name
+            ckpt = tempfile.mkdtemp(prefix=f"callysto_mem_{stream.name}_")
+            self._ephemeral_dirs.append(ckpt)
+        q = writer.queryName(qname).option("checkpointLocation", ckpt).trigger(**trigger).start()
+        # Track query → owning stream by query id, so supervision and
+        # stop_agent never depend on name matching (foreachBatch queries
+        # historically had name=None — the silent-failure bug).
+        self._queries.append(q)
+        self._query_owner[str(q.id)] = stream.name
 
     def run(self, await_termination: bool = True, timeout: float | None = None) -> None:
         """Start everything (reference start order, `app.rs:644-880`):
-        services first, then agents/flows, then tasks, then timers."""
+        services first, then streams (agents, table agents and flows, in
+        registration order), then tasks, then timers."""
         ctx = Context(self, "__app__")
         if self._pages and self._web is None:
             from callysto_spark.runtime.web import OpsServer
@@ -464,10 +428,8 @@ class App:
             t = threading.Thread(target=svc, args=(ctx, self._stop_event), daemon=True)
             t.start()
             self._threads.append(t)
-        for agent in self._agents.values():
-            self._start_agent(agent)
-        for flow in self._flows.values():
-            self._start_flow(flow)
+        for stream in self._streams.values():
+            self._start(stream)
         for task in self._tasks:
             task(ctx)
         for interval, fn in self._timers:
@@ -557,13 +519,13 @@ class App:
                     except ValueError:
                         pass  # stop()/stop_agent removed it concurrently
                     self._failures.append((name, str(exc)))
-                    if name is None or name not in self._agents:
+                    if name is None or name not in self._streams:
                         log.error("query %s failed with no restartable owner: %s", q.id, exc)
                         continue
                     if name in self._stopped_agents:
                         # the user stopped this agent (possibly racing the
                         # crash) — honoring the stop beats resurrecting
-                        log.info("agent %r crashed but was stopped; not restarting", name)
+                        log.info("stream %r crashed but was stopped; not restarting", name)
                         continue
                     # Atomically [check stop → mark restart in flight]:
                     # stop() sets the event and then barriers on this
@@ -579,7 +541,7 @@ class App:
                             continue
                         if restarts.get(name, 0) >= max_restarts:
                             log.error(
-                                "agent %r exceeded max_restarts=%d: %s", name, max_restarts, exc
+                                "stream %r exceeded max_restarts=%d: %s", name, max_restarts, exc
                             )
                             continue
                         restarts[name] = restarts.get(name, 0) + 1
@@ -589,9 +551,9 @@ class App:
                         # idle" while the replacement query is being built
                         self._restarting += 1
                     try:
-                        self._start_agent(self._agents[name])
+                        self._start(self._streams[name])
                     except Exception:
-                        log.exception("restart of agent %r failed", name)
+                        log.exception("restart of stream %r failed", name)
                     finally:
                         # under the lock: a bare `-= 1` read-modify-write
                         # can interleave with another thread's locked
@@ -605,16 +567,16 @@ class App:
         self._threads.append(t)
 
     def run_agent(self, name: str) -> None:
-        """Start a single registered agent at runtime, outside
-        :meth:`run`'s bookkeeping (reference dynamic spawn,
+        """Start a single registered agent, table agent or flow at
+        runtime, outside :meth:`run`'s bookkeeping (reference dynamic spawn,
         `app.rs:626-640` / the `onthefly` feature `app.rs:766-864`)."""
         self._stopped_agents.discard(name)  # explicit start re-arms supervision
-        self._start_agent(self._agents[name])
+        self._start(self._streams[name])
 
     def stop_agent(self, name: str) -> None:
-        """Stop the streaming query backing an agent (runtime query
+        """Stop the streaming query backing a stream (runtime query
         management — ownership tracked by query id, not name).
-        Marks the agent stopped FIRST so a crash racing this call can
+        Marks the stream stopped FIRST so a crash racing this call can
         never be resurrected by the supervision monitor."""
         self._stopped_agents.add(name)
         for q in list(self._queries):

@@ -19,6 +19,8 @@ strings stay readable while the executed SQL matches Spark exactly.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, functions as F
 
 
@@ -69,31 +71,51 @@ def fixed_sum(col: Column | str, scale: int = 100) -> Column:
     return F.sum(F.when(F.abs(pre) <= F.lit(2.0**53), F.floor(pre))) / F.lit(float(scale))
 
 
-def _expand_macro(sql: str, name: str, build) -> str:
-    import re
+def _find_call(sql: str, name: str, start: int = 0, flags: int = 0) -> tuple[int, int, str] | None:
+    """Locate the next ``name(`` call at or after ``start`` together with
+    its matching paren; return (start_idx, end_idx_exclusive, body), or
+    None when there is no call or its paren never closes."""
+    m = re.search(rf"\b{name}\s*\(", sql[start:], flags=flags)
+    if not m:
+        return None
+    open_idx = start + m.end() - 1
+    depth = 0
+    for i in range(open_idx, len(sql)):
+        if sql[i] == "(":
+            depth += 1
+        elif sql[i] == ")":
+            depth -= 1
+            if depth == 0:
+                return (start + m.start(), i + 1, sql[open_idx + 1 : i])
+    return None
 
+
+def _split_last_comma(body: str) -> tuple[str, str] | None:
+    """Split a call body on its LAST top-level comma (``expr, n``); None
+    when it has no top-level comma."""
+    depth = 0
+    last = -1
+    for j, ch in enumerate(body):
+        if ch == "(":
+            depth += 1
+        elif ch == ")":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            last = j
+    if last < 0:
+        return None
+    return body[:last].strip(), body[last + 1 :].strip()
+
+
+def _expand_macro(sql: str, name: str, build) -> str:
     out = sql
     pos = 0
-    while True:
-        m = re.search(rf"\b{name}\s*\(", out[pos:])
-        if not m:
-            return out
-        open_idx = pos + m.end() - 1
-        depth = 0
-        for i in range(open_idx, len(out)):
-            if out[i] == "(":
-                depth += 1
-            elif out[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    body = out[open_idx + 1 : i]
-                    repl = build(body)
-                    start = pos + m.start()
-                    out = out[:start] + repl + out[i + 1 :]
-                    pos = start + len(repl)
-                    break
-        else:
-            return out
+    while (hit := _find_call(out, name, pos)) is not None:
+        s, e, body = hit
+        repl = build(body)
+        out = out[:s] + repl + out[e:]
+        pos = s + len(repl)
+    return out
 
 
 def rewrite_oracle_fixed(sql: str) -> str:
@@ -114,66 +136,17 @@ def rewrite_oracle_fixed(sql: str) -> str:
         return _fixed(body, "100")
 
     def fsum(body: str) -> str:
-        # split on last top-level comma
-        depth = 0
-        last = -1
-        for j, ch in enumerate(body):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                last = j
-        if last < 0:
+        parts = _split_last_comma(body)
+        if parts is None:
             # silently proceeding would slice body[:-1] into garbage SQL
             # ("pric" * price.0) that fails far from the macro or, worse,
             # binds to something and computes wrong sums
             raise ValueError(
                 f"FSUM macro requires (expr, scale) — no top-level comma in {body!r}"
             )
-        expr, scale = body[:last].strip(), body[last + 1 :].strip()
-        return _fixed(expr, scale)
+        return _fixed(*parts)
 
     return _expand_macro(_expand_macro(sql, "MSUM", msum), "FSUM", fsum)
-
-
-def _find_round_call(sql: str, start: int = 0) -> tuple[int, int, str, str] | None:
-    """Locate the next top-level ``round(`` call; return
-    (start_idx, end_idx_exclusive, inner_expr, n_digits)."""
-    import re
-
-    m = re.search(r"\bround\s*\(", sql[start:], flags=re.IGNORECASE)
-    if not m:
-        return None
-    open_idx = start + m.end() - 1
-    depth = 0
-    for i in range(open_idx, len(sql)):
-        if sql[i] == "(":
-            depth += 1
-        elif sql[i] == ")":
-            depth -= 1
-            if depth == 0:
-                body = sql[open_idx + 1 : i]
-                # split on the LAST top-level comma (expr, n)
-                d = 0
-                last_comma = -1
-                for j, ch in enumerate(body):
-                    if ch == "(":
-                        d += 1
-                    elif ch == ")":
-                        d -= 1
-                    elif ch == "," and d == 0:
-                        last_comma = j
-                if last_comma < 0:
-                    # single-argument round(x): return the hit with an
-                    # empty digits field so the CALLER can skip just
-                    # this call — returning None here aborted the whole
-                    # rewrite loop, leaving every LATER round(expr, n)
-                    # in native form (r7 review)
-                    return (start + m.start(), i + 1, body.strip(), "")
-                expr, n = body[:last_comma], body[last_comma + 1 :]
-                return (start + m.start(), i + 1, expr.strip(), n.strip())
-    return None
 
 
 def rewrite_oracle_round(sql: str) -> str:
@@ -193,14 +166,16 @@ def rewrite_oracle_round(sql: str) -> str:
     out: list[str] = []
     pos = 0
     while True:
-        hit = _find_round_call(sql, pos)
+        hit = _find_call(sql, "round", pos, re.IGNORECASE)
         if hit is None:
             out.append(sql[pos:])
             return "".join(out)
-        s, e, expr, n = hit
+        s, e, body = hit
+        expr, n = _split_last_comma(body) or (body, "")
         if not n.isdigit():
-            # skip only the WORD "round", not the whole call: the body
-            # of a non-rewritable round(...) may itself contain
+            # skip only the WORD "round", not the whole call: a
+            # single-argument round(x) or a non-literal digits field is
+            # not rewritable, but its body may itself contain
             # rewritable round(expr, n) calls that jumping to `e`
             # would leave in native form
             out.append(sql[pos : s + len("round")])

@@ -19,10 +19,11 @@ Codec status by modality:
   ``operators/png_py.py`` (all five scanline filters on decode,
   nearest-neighbor resample, valid re-encode).
 - JPEG/video codec libraries (PIL/ffmpeg) are NOT in this build:
-  ``decoder='fake'`` derives deterministic pseudo-features from the
+  ``extract_features``, ``sample_frames`` and ``resize_media``'s
+  ``decoder='fake'`` derive deterministic pseudo-features from the
   bytes so the Spark-side plumbing (schema, batch shape, partitioning)
-  is fully testable, and any decoder a function does not implement
-  (``'stub'`` included) raises ValueError on the driver.
+  is fully testable. ``resize_media`` rejects any other decoder
+  (``'stub'`` included) with ValueError on the driver.
 """
 
 from __future__ import annotations
@@ -47,16 +48,6 @@ def _check_on_error(on_error: str) -> None:
         raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
 
 
-def _check_decoder(decoder: str, supported: tuple[str, ...]) -> None:
-    """Reject on the driver a decoder the function does not implement —
-    it would otherwise fall through to the sha256 stand-in."""
-    if decoder not in supported:
-        raise ValueError(
-            f"decoder {decoder!r} is unavailable: no codec library for it is in "
-            f"this build (supported: {', '.join(map(repr, supported))})"
-        )
-
-
 def _fake_features(payload: bytes, dim: int) -> list[float]:
     """Deterministic pseudo-embedding: sha256-seeded floats in [0,1).
     Stands in for a real encoder; stable across runs/engines."""
@@ -70,18 +61,13 @@ def _fake_features(payload: bytes, dim: int) -> list[float]:
     return [float(x) for x in out[:dim]]
 
 
-def extract_features(
-    media: DataFrame,
-    dim: int = 16,
-    decoder: str = "fake",
-) -> DataFrame:
+def extract_features(media: DataFrame, dim: int = 16) -> DataFrame:
     """binary media column → fixed-dim feature vectors via mapInPandas.
 
-    Only ``decoder='fake'`` exists: deterministic features for plumbing
-    tests. A real codec (PIL decode, resize, frame-sample,
-    mel-spectrogram) would plug in as another decoder.
+    The features are deterministic sha256-derived stand-ins for plumbing
+    tests: no image/video codec library is in this build (real decodes
+    are ``wav_features`` and ``png_features``).
     """
-    _check_decoder(decoder, ("fake",))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -125,7 +111,13 @@ def resize_media(
     job.
     """
     _check_on_error(on_error)
-    _check_decoder(decoder, ("fake", "png"))
+    if decoder not in ("fake", "png"):
+        # reject on the driver: it would otherwise fall through to the
+        # sha256 stand-in
+        raise ValueError(
+            f"decoder {decoder!r} is unavailable: no codec library for it is in "
+            "this build (supported: 'fake', 'png')"
+        )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -180,13 +172,12 @@ def sample_frames(
     media: DataFrame,
     every_ms: int = 1000,
     max_frames: int = 32,
-    decoder: str = "fake",
 ) -> DataFrame:
     """Sample frames from video/audio payloads at a fixed period
     (1→N row expansion inside the Arrow batch — the frame table stays
     distributed; no driver involvement, no shuffle).
 
-    Only 'fake' exists (no ffmpeg in this build): it derives ``duration_ms/every_ms``
+    No ffmpeg is in this build, so it derives ``duration_ms/every_ms``
     deterministic frames per row (capped at ``max_frames``), so the
     exploding batch shape, schema, and cap are all testable. Rows with
     no duration (e.g. still images) yield one frame at ts 0.
@@ -195,7 +186,6 @@ def sample_frames(
         # validate on the DRIVER: every_ms=0 would ZeroDivisionError
         # inside a mapInPandas worker with an opaque executor traceback
         raise ValueError(f"sample_frames every_ms must be >= 1, got {every_ms}")
-    _check_decoder(decoder, ("fake",))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -65,8 +65,8 @@ class OpsServer:
         self.routes: dict[str, Callable[..., Any]] = {
             "/": lambda: {
                 "app": app.name,
-                "agents": sorted(getattr(app, "_agents", {})),
-                "flows": sorted(getattr(app, "_flows", {})),
+                "agents": sorted(n for n, s in app._streams.items() if s.kind == "agent"),
+                "flows": sorted(n for n, s in app._streams.items() if s.kind == "flow"),
                 "tables": sorted(getattr(app, "_tables", {})),
                 "queries_active": len(getattr(app, "_queries", [])),
             },

@@ -5,7 +5,6 @@ from callysto_spark.sinks.core import (
     ElasticsearchSink,
     MemorySink,
     MemTopicSink,
-    sink_to_foreach_batch,
 )
 
 __all__ = [
@@ -15,5 +14,4 @@ __all__ = [
     "ElasticsearchSink",
     "MemorySink",
     "MemTopicSink",
-    "sink_to_foreach_batch",
 ]

@@ -26,14 +26,12 @@ from typing import Any
 
 from pyspark.sql import DataFrame, functions as F
 
+from callysto_spark.sources.descriptors import kafka_connector_missing
+
 
 class Sink:
     def write(self, df: DataFrame, batch_id: int = 0) -> None:  # pragma: no cover
         raise NotImplementedError
-
-
-def sink_to_foreach_batch(sink: "Sink") -> Callable[[DataFrame, int], None]:
-    return lambda df, batch_id: sink.write(df, batch_id)
 
 
 @dataclass
@@ -93,12 +91,7 @@ class KafkaSink(Sink):
             # reword ONLY the missing-connector failure: a blanket
             # rebrand would turn broker-unreachable / auth / ACL errors
             # into a phantom classpath hunt (the JdbcSink pattern)
-            msg = str(exc)
-            if (
-                "ClassNotFoundException" in msg
-                or "DATA_SOURCE_NOT_FOUND" in msg
-                or "Failed to find data source" in msg
-            ):
+            if kafka_connector_missing(exc):
                 raise RuntimeError(
                     "Kafka sink requires the spark-sql-kafka connector jar on the classpath"
                 ) from exc

@@ -42,6 +42,17 @@ def kafka_option_key(key: str) -> str:
     return f"kafka.{key}"
 
 
+def kafka_connector_missing(exc: Exception) -> bool:
+    """True when ``exc`` says the spark-sql-kafka connector is not on the
+    classpath — the one failure the Kafka source and sink reword."""
+    msg = str(exc)
+    return (
+        "ClassNotFoundException" in msg
+        or "DATA_SOURCE_NOT_FOUND" in msg
+        or "Failed to find data source" in msg
+    )
+
+
 @dataclass
 class SourceSpec:
     kind: str  # kafka | rate | parquet_stream | file | dataframe | batch_parquet
@@ -118,12 +129,7 @@ class SourceSpec:
                 # jar present, a bad option (malformed startingOffsets
                 # JSON, auth config) must surface as itself, not as a
                 # phantom classpath problem (same rule as KafkaSink)
-                msg = str(exc)
-                if (
-                    "ClassNotFoundException" in msg
-                    or "DATA_SOURCE_NOT_FOUND" in msg
-                    or "Failed to find data source" in msg
-                ):
+                if kafka_connector_missing(exc):
                     raise RuntimeError(
                         "Kafka source requires the spark-sql-kafka connector jar "
                         "(--packages org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version>)"

@@ -236,7 +236,7 @@ class MemTopicStreamReader(DataSourceStreamReader):
     availableNow trigger the cap means the one batch admits only ``cap``
     records per partition and the query "successfully" terminates with
     backlog unprocessed. The App layer rejects that combination
-    (`app.py:_start_agent`); use a processingTime trigger with the cap,
+    (`app.py:App._start`); use a processingTime trigger with the cap,
     or drop the cap under availableNow.
     """
 

@@ -324,7 +324,29 @@ def test_agent_options_are_closed_keywords(app, tmp_path, register):
     table = app.table("t", key_schema="k string", value_schema="cnt long")
     with pytest.raises(TypeError, match="unexpected keyword argument"):
         register(app, src, table)
-    assert app._agents == {}
+    assert app._streams == {}
+
+
+@pytest.mark.parametrize(
+    "first, second",
+    [("agent", "flow"), ("flow", "table_agent"), ("table_agent", "agent")],
+)
+def test_stream_names_register_once(app, tmp_path, first, second):
+    """Agents, table agents and flows share one name space (one
+    checkpoint directory and query name per name): a second registration
+    under a taken name raises and leaves the first one in place."""
+    src = SourceSpec.parquet_stream(str(tmp_path), schema="k string")
+    table = app.table("t", key_schema="k string", value_schema="cnt long")
+    register = {
+        "agent": lambda: app.agent("dup", src)(lambda df, ctx: None),
+        "flow": lambda: app.flow("dup", src, transform=lambda df: df, sink=print),
+        "table_agent": lambda: app.table_agent("dup", src, table)(lambda k, pdf, st: None),
+    }
+    register[first]()
+    kept = app._streams["dup"]
+    with pytest.raises(ValueError, match="already registered"):
+        register[second]()
+    assert app._streams == {"dup": kept}
 
 
 def test_explicit_available_now_trigger_rejects_memtopic_cap(app, tmp_path):
@@ -335,6 +357,22 @@ def test_explicit_available_now_trigger_rejects_memtopic_cap(app, tmp_path):
     app.table_agent("capped", src, table, trigger={"availableNow": True})(lambda k, pdf, st: None)
     with pytest.raises(ValueError, match="availableNow"):
         app.run(await_termination=False)
+
+
+def test_capped_memtopic_flow_rejected(app, tmp_path):
+    """The memtopic maxRecordsPerTrigger + availableNow rejection holds
+    for flows too: such a flow used to drain 5 of 50 records and return
+    as if it had finished."""
+    from callysto_spark.sources.memtopic import produce
+
+    broker = str(tmp_path / "broker")
+    produce(broker, "capf", [(None, str(i)) for i in range(50)], n_partitions=1)
+    src = SourceSpec.memtopic("capf", broker, partitions=1, maxRecordsPerTrigger="5")
+    seen: list[int] = []
+    app.flow("capped", src, transform=lambda df: df, sink=lambda b: seen.append(b.count()))
+    with pytest.raises(ValueError, match="availableNow"):
+        app.run(await_termination=True, timeout=60)
+    assert seen == [] and app.queries == []
 
 
 class _NoSig:
@@ -473,13 +511,15 @@ def test_memory_sink_stateful_agent_survives_rerun(spark, tmp_path, sf_dir):
         assert got == {"even": n // 2, "odd": n // 2}, "fresh state each run"
 
 
-def test_auto_restart_survives_crash_and_run_returns(app, spark, tmp_path, sf_dir):
-    """L9 crash-restart, executed end to end: an agent whose foreachBatch
-    raises once must (a) NOT propagate out of run(await_termination=True)
-    while supervision is on — awaitTermination() re-raises crashed-query
-    exceptions, so an unsupervised await would abort the app even as the
-    monitor restarts it — and (b) be restarted from its checkpoint so the
-    batch is reprocessed and state lands."""
+@pytest.mark.parametrize("kind", ["agent", "flow"])
+def test_auto_restart_survives_crash_and_run_returns(app, spark, tmp_path, sf_dir, kind):
+    """L9 crash-restart, executed end to end, for an agent and for a
+    flow: a stream whose foreachBatch raises once must (a) NOT propagate
+    out of run(await_termination=True) while supervision is on —
+    awaitTermination() re-raises crashed-query exceptions, so an
+    unsupervised await would abort the app even as the monitor restarts
+    it — and (b) be restarted from its checkpoint so the batch is
+    reprocessed and state lands."""
     import shutil
 
     from callysto_spark.sources import SourceSpec
@@ -493,17 +533,20 @@ def test_auto_restart_survives_crash_and_run_returns(app, spark, tmp_path, sf_di
     )
     crashes = {"n": 0}
 
-    @app.agent("flaky", src)
-    def flaky(df, ctx):
+    def flaky(df):
         if crashes["n"] == 0:
             crashes["n"] += 1
             raise RuntimeError("boom (injected once)")
-        ctx.state["rows"] = ctx.state.get("rows", 0) + df.count()
+        app.state["rows"] = app.state.get("rows", 0) + df.count()
 
+    if kind == "agent":
+        app.agent("flaky", src)(lambda df, ctx: flaky(df))
+    else:
+        app.flow("flaky", src, transform=lambda df: df, sink=flaky)
     app.enable_auto_restart(poll_seconds=0.2, max_restarts=3)
     app.run(await_termination=True, timeout=120)  # must NOT raise
     assert crashes["n"] == 1
-    assert app.state.get("rows", 0) > 0, "restarted agent must reprocess the batch"
+    assert app.state.get("rows", 0) > 0, "restarted stream must reprocess the batch"
     assert app.failures and app.failures[0][0] == "flaky"
     assert "boom" in app.failures[0][1]
 
@@ -511,12 +554,12 @@ def test_auto_restart_survives_crash_and_run_returns(app, spark, tmp_path, sf_di
 def test_auto_restart_slow_start_holds_run_open(app, spark, tmp_path, sf_dir):
     """The supervised-await gating under a SLOW restart: starting a
     streaming query can take multi-second synchronous work inside
-    _start_agent, during which no query is active. run()'s poll loop
+    App._start, during which no query is active. run()'s poll loop
     must count an in-flight restart (_restarting > 0) as activity —
     otherwise it concludes 'all idle' past the grace window and returns
     while the replacement query is still being built, tearing down
     around a half-started agent. Injects a 2-second delay into the
-    RESTART invocation of _start_agent (grace is 0.6s) and requires the
+    RESTART invocation of App._start (grace is 0.6s) and requires the
     reprocessed batch to have landed by the time run() returns."""
     import shutil
     import time
@@ -539,16 +582,16 @@ def test_auto_restart_slow_start_holds_run_open(app, spark, tmp_path, sf_dir):
             raise RuntimeError("boom (injected once)")
         ctx.state["rows"] = ctx.state.get("rows", 0) + df.count()
 
-    real_start = app._start_agent
+    real_start = app._start
     starts = {"n": 0}
 
-    def slow_start(agent):
+    def slow_start(stream):
         starts["n"] += 1
         if starts["n"] > 1:  # delay only the restart path, not initial start
             time.sleep(2.0)
-        return real_start(agent)
+        return real_start(stream)
 
-    app._start_agent = slow_start
+    app._start = slow_start
     app.enable_auto_restart(poll_seconds=0.3, max_restarts=3)
     app.run(await_termination=True, timeout=120)
     assert crashes["n"] == 1

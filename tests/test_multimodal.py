@@ -31,30 +31,26 @@ def test_fake_decoder_schema_and_determinism(spark):
     assert sorted(map(str, out1)) == sorted(map(str, out2))
 
 
-def test_stub_decoder_raises_at_seam(spark):
-    df = _media_df(spark)
-    with pytest.raises(Exception) as err:
-        extract_features(df, dim=4, decoder="stub").collect()
-    assert "NotImplementedError" in str(err.value) or "codec" in str(err.value)
-
-
 @pytest.mark.parametrize(
-    "call",
+    "call, exc, match",
     [
-        lambda mm, df: mm.resize_media(df, 8, 8, decoder="PNG"),
-        lambda mm, df: mm.resize_media(df, 8, 8, decoder="stub"),
-        lambda mm, df: mm.extract_features(df, decoder="png"),
-        lambda mm, df: mm.sample_frames(df, decoder="png"),
+        (lambda mm, df: mm.resize_media(df, 8, 8, decoder="PNG"), ValueError, "no codec library"),
+        (lambda mm, df: mm.resize_media(df, 8, 8, decoder="stub"), ValueError, "no codec library"),
+        # extract_features/sample_frames have one stand-in codec and no
+        # decoder option: naming one fails at the call
+        (lambda mm, df: mm.extract_features(df, decoder="png"), TypeError, "unexpected keyword"),
+        (lambda mm, df: mm.extract_features(df, dim=4, decoder="stub"), TypeError, "unexpected keyword"),
+        (lambda mm, df: mm.sample_frames(df, decoder="png"), TypeError, "unexpected keyword"),
     ],
-    ids=["resize_PNG", "resize_stub", "features_png", "frames_png"],
+    ids=["resize_PNG", "resize_stub", "features_png", "features_stub", "frames_png"],
 )
-def test_unimplemented_decoder_rejected_on_driver(spark, call):
+def test_unimplemented_decoder_rejected_on_driver(spark, call, exc, match):
     """A decoder a function does not implement used to fall through to the
     sha256 stand-in and return fake bytes; it now fails before any plan
     runs (no collect needed)."""
     from callysto_spark.operators import multimodal
 
-    with pytest.raises(ValueError, match="no codec library"):
+    with pytest.raises(exc, match=match):
         call(multimodal, _media_df(spark))
 
 

@@ -21,24 +21,15 @@ pass that compiles anything shows code the cache cannot reuse.
 from __future__ import annotations
 
 import argparse
-import io
 import os
 import re
 import sys
-from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from callysto_spark.plans.audit import pushed_filters_in
+from callysto_spark.plans.audit import physical_plan, pushed_filters_in
 from callysto_spark.queries import load_all
 from callysto_spark.session import get_spark
-
-
-def plan_text(df) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def plan_summary(text: str) -> str:
@@ -114,7 +105,7 @@ def main() -> None:
         codegen_report(spark, registry, names, sf_dir)
         return
     for name in names:
-        print(f"{name}: {plan_summary(plan_text(registry[name].fn(spark, sf_dir)))}")
+        print(f"{name}: {plan_summary(physical_plan(registry[name].fn(spark, sf_dir)))}")
 
 
 if __name__ == "__main__":
